@@ -210,23 +210,18 @@ object DedupOps {
     (sig >> start) & ((1L << width) - 1)
   }
 
-  /** The (band, bkey) struct columns for a simhash band layout:
-    * bands = 0 → the default C(6,3) block-combination banding,
-    * otherwise `bands` contiguous `bits`-wide bands. Shared by
-    * [[dedupSimhash]] and ZipfDedupBench's occupancy reporter so the
-    * measured cap pressure is the shipped banding, not a re-derivation.
+  /** The (band, bkey) struct columns of the C(6,3) block-combination
+    * banding. Shared by [[dedupSimhash]], f6–f8's phash banding and
+    * ZipfDedupBench's occupancy reporter, so the measured cap pressure
+    * is the shipped banding, not a re-derivation.
     */
-  private[graft] def simhashBandCols(sig: Column, bands: Int,
-                                     bits: Int): Seq[Column] =
-    if (bands == 0) simhashCombos.indices.map { c =>
+  private[graft] def simhashBandCols(sig: Column): Seq[Column] =
+    simhashCombos.indices.map { c =>
       val Array(i, j, k) = simhashCombos(c)
       val key = shiftleft(simhashBlock(sig, i), 22)
         .bitwiseOR(shiftleft(simhashBlock(sig, j), 11))
         .bitwiseOR(simhashBlock(sig, k))
       struct(lit(c).as("band"), key.as("bkey"))
-    }
-    else (0 until bands).map { b =>
-      struct(lit(b).as("band"), VectorFns.lshBand(sig, b, bits).as("bkey"))
     }
 
   /** c3's signature stage: idf-WEIGHTED 64-bit SimHash per doc —
@@ -238,7 +233,8 @@ object DedupOps {
     * UNWEIGHTED votes on Zipf text are dominated by the handful of
     * stopwords every doc shares, which concentrates the signature bit
     * marginals and makes DISTINCT signatures collide on 31–33-bit
-    * band keys at 20–40× the uniform rate (C3Probe, ×1000 slice:
+    * band keys at 20–40× the uniform rate (BASELINE.md round-16
+    * Zipf ×1000 decomposition, `BENCH_dev_r16_c3_probe.json`:
     * 40.3M candidate pairs, 0.7% within the guaranteed hamming ≤ 3
     * radius, 18.7× decade cost). Integer idf-bucket weights make the
     * votes of a doc's RARE (discriminative) tokens dominate — a
@@ -302,32 +298,28 @@ object DedupOps {
     *    construction — see [[simhashBlocks]]): 20 bands of ≤ 33-bit
     *    keys hold the SAME hamming ≤ 3 guarantee; under UNIFORM
     *    signatures occupancy is ~N/2³¹ ≈ 0 into billions of docs.
-    *    Measured caveat (C3Probe, ×1000 Zipf decade): stopword-heavy
-    *    text CONCENTRATES simhash bit marginals, so distinct
-    *    signatures collide on block keys far above the uniform rate —
+    *    Measured caveat (×1000 Zipf decade, BASELINE.md round 16):
+    *    stopword-heavy text CONCENTRATES simhash bit marginals, so
+    *    distinct signatures collide on block keys far above the uniform rate —
     *    40M candidates at 5M docs, only 0.7% within the guaranteed
     *    radius, 18.7× for that decade. The cost self-limits into the
     *    cap regime (sub-cap pair volume ≤ 32·rows, linear) and recall
     *    degrades only when ALL 20 of a pair's shared bands go
-    *    over-cap (occupancy tracked per decade in ZipfDedupBench's
+    *    over-cap (occupancy measured per decade by ZipfDedupBench's
     *    c3_occupancy artifact: 6e-5 of buckets at 5M docs, vs 23%
-    *    for the retired 4×16 and 100% for 8×8 — the foils are
-    *    cheaper at ×1000 ONLY because they drop those buckets
-    *    wholesale). The semantic remedy for the concentration itself
-    *    is integer-idf-weighted votes (Manku §2 uses weighted
-    *    features) — a measured decision deferred; see BASELINE.
-    * Both contiguous layouts survive as explicit-argument foils
-    * (`bands`/`bits` non-zero) for RecallAtScaleSpec/ZipfDedupBench to
-    * keep measuring the collapses they were retired for. Over-cap
-    * buckets under the default layout mean ≥ cap docs share 31+
-    * signature bits — true boilerplate mega-clusters, c1's territory
-    * by definition (the cap bounds their quadratic, exactly as in c2).
+    *    for the retired 4×16 and 100% for 8×8 — the contiguous
+    *    layouts were cheaper at ×1000 ONLY because they dropped those
+    *    buckets wholesale). Round 17 landed the semantic remedy for
+    *    the concentration itself: integer-idf-weighted votes (Manku §2
+    *    uses weighted features; [[simhashWeightedSigsFrom]]).
+    * The retired contiguous layouts' curves are recorded in
+    * `BENCH_dev_r16_zipf*` and `BENCH_dev_r17_zipf.json`. Over-cap
+    * buckets mean ≥ cap docs share 31+ signature bits — true
+    * boilerplate mega-clusters, c1's territory by definition (the cap
+    * bounds their quadratic, exactly as in c2).
     */
   def dedupSimhash(spark: SparkSession, dir: String,
-                   bucketCap: Int = 64, limit: Int = 100,
-                   bands: Int = 0, bits: Int = 0): DataFrame = {
-    require((bands == 0 && bits == 0) || bands * bits == 64,
-      s"bands x bits must tile the 64-bit simhash (or 0,0 = default block-combination layout), got $bands x $bits")
+                   bucketCap: Int = 64, limit: Int = 100): DataFrame = {
     // Signatures: idf-WEIGHTED votes (round 17 — was the unweighted
     // one-pass Simhash64 kernel; see [[simhashWeightedSigsFrom]] for
     // the measured collision-concentration reason and the 2-exchange
@@ -340,7 +332,7 @@ object DedupOps {
     // consumers — band explode + both sides of the pair hamming lookup
     val sigs = simhashWeightedSigsFrom(docs(spark, dir))
       .localCheckpoint(false)
-    val bandCols = simhashBandCols(col("sig"), bands, bits)
+    val bandCols = simhashBandCols(col("sig"))
     // bucket-capped pair generation in the c4/c2 inverted-index shape
     // (round 11 — was window-count + band self-join): one groupBy with
     // O(cap) state per band key, pairs expanded in-array from the
@@ -393,7 +385,7 @@ object DedupOps {
   /** c4's EXHAUSTIVE arm: word-3-gram Jaccard via inverted shingle
     * index, every surviving posting list expanded to C(df,2) pairs
     * in-array. Unconditionally exact — [[ngramJaccard]]'s fallback and
-    * ScaleBench's A/B foil for the prefix-filtered path. The
+    * the specs' reference for the banded arm. The
     * document-frequency cap drops super-common shingles (the classic
     * skew guard); Jaccard is computed over the capped shingle
     * vocabulary for both numerator and denominator, so the metric
@@ -434,130 +426,15 @@ object DedupOps {
       .limit(50)
   }
 
-  /** c4's positional-filtered candidate path — the public
-    * AllPairs/PPJoin idea (Bayardo et al. WWW'07 "Scaling Up All Pairs
-    * Similarity Search"; Xiao et al. WWW'08 PPJoin) specialized to the
-    * top-50 query. Rank each doc's surviving shingles by the global
-    * (df asc, shingle) total order; a pair with Jaccard ≥ τ has
-    * inter ≥ ⌈τ/(1+τ)·(na+nb)⌉ (solve J = I/(na+nb−I) ≥ τ for I), and
-    * at its ORDER-MINIMAL shared shingle every shared shingle ranks ≥
-    * it in BOTH docs, so inter ≤ min(na−rna, nb−rnb) + 1 there — the
-    * per-occurrence positional filter keeps that occurrence for every
-    * qualifying pair (completeness) while a noise pair sharing only
-    * mid-rank shingles fails it at all of its occurrences. The df-asc
-    * order makes near-cap boilerplate shingles rank LAST in their
-    * docs, so the C(df,2) expansions that dominate the exhaustive arm
-    * at scale emit (almost) nothing here.
-    *
-    * Stages: the one [[ngramJaccardIndex]] aggregation; one window by
-    * doc for (rank, n), localCheckpointed (three consumers); candidate
-    * generation as a codegen'd SELF-JOIN on the shingle key with both
-    * bounds as residuals (see the inline note — the in-array
-    * expansion's higher-order lambdas are interpreted); exact verify
-    * of the surviving pairs via md5-derived 64-bit shingle-hash sets
-    * built only for candidate docs (broadcast semi-filter), with
-    * codegen'd array_intersect — survivor rows already carry the
-    * symmetric size sum, so no size join ever touches a pair stream.
-    * Output rows carry the identical rounded-jaccard/tiebreak
-    * contract as the exhaustive form, so on any corpus whose true
-    * 50th-best pair clears τ the two arms are byte-identical
-    * ([[ngramJaccard]] checks exactly that and falls back otherwise).
-    *
-    * 100 TB shape: every stage is linear in corpus size — the C(df,2)
-    * enumeration happens inside one whole-stage-codegen'd join that
-    * emits only bound-passing pairs, and verify touches only candidate
-    * docs. Measured (BENCH_r11_sf10, same run, same ambient): data
-    * ×100 = 67.6 s vs the exhaustive arm's 180.3 s at matched config.
-    */
-  private[graft] def ngramJaccardPrefix(spark: SparkSession, dir: String,
-                                        dfCap: Int = 100,
-                                        tau: Double = 0.8): DataFrame = {
-    // (shingle, doc) postings ranked per doc by the global (df asc,
-    // shingle) total order; n = the doc's surviving-shingle count.
-    // Both window functions share the one shuffle-by-doc exchange.
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = ngramJaccardIndex(spark, dir, dfCap)
-      .select(col("shingle"), size(col("ids")).as("df"),
-              explode(col("ids")).as("doc_id"))
-      // h: the shingle's md5-derived 64-bit key — the string is dropped
-      // after the rank window (narrower shuffles from here on). A
-      // cross-shingle collision only MERGES two posting lists in the
-      // candidate stage (extra candidates, killed by exact verify) —
-      // completeness is unaffected, and the rank order stays exact
-      // because the string is the (df, h) tiebreak.
-      .withColumn("h", TextFns.md5hash64(col("shingle")))
-      .withColumn("rn", row_number().over(
-        byDoc.orderBy(col("df"), col("h"), col("shingle"))))
-      .withColumn("n", count(lit(1)).over(byDoc))
-      .select(col("h"), col("doc_id"), col("rn"), col("n"))
-      // three consumers (both self-join sides + the verify docSets);
-      // without the checkpoint each would re-run the index aggregation
-      // and the rank window — exchange reuse only dedups the shuffles
-      .localCheckpoint(false)
-    // Regroup by shingle into doc_id-sorted (id, rn, n) structs, then
-    // expand candidate pairs in-array with the per-occurrence filters:
-    //  - length:     min(na,nb) ≥ τ·max(na,nb)   (J ≤ min/max)
-    //  - positional: min(na−rna, nb−rnb) + 1 ≥ ⌈τ/(1+τ)·(na+nb)⌉
-    // For a pair with J ≥ τ the ORDER-MINIMAL shared shingle passes
-    // both (all shared shingles rank ≥ it in both docs, so inter ≤
-    // min-suffix+1, and J ≥ τ forces inter ≥ the α bound), so every
-    // qualifying pair survives; a noise pair sharing one mid-rank
-    // shingle fails the positional bound at every occurrence. The
-    // 1e-9 slack biases the fp ceil DOWNWARD (weaker filter) —
-    // conservative, never unsafe.
-    // Candidate generation is a SELF-JOIN on the shingle key with the
-    // two bounds as join residuals — NOT an in-array expansion: the
-    // higher-order array lambdas are CodegenFallback (interpreted), so
-    // enumerating the C(df,2) combinations there costs ~3× the same
-    // enumeration inside a whole-stage-codegen'd join, and here the
-    // residual filters discard ~99% of combinations before any row
-    // materializes. The positional bound sheds its ceil(): for integer
-    // lhs, lhs ≥ ⌈c·s − ε⌉ ⟺ lhs ≥ c·s − ε exactly. The jaccard
-    // denominator is symmetric (s = na+nb), so survivors carry no
-    // per-side size attribution.
-    val cTau = tau / (1.0 + tau)
-    val survivors = ranked.as("x")
-      .join(ranked.as("y"),
-        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id") &&
-          least(col("x.n"), col("y.n")).cast("double") >=
-            lit(tau) * (col("x.n") + col("y.n") -
-                        least(col("x.n"), col("y.n"))) - lit(1e-9) &&
-          (least(col("x.n") - col("x.rn"), col("y.n") - col("y.rn")) +
-            lit(1)).cast("double") >=
-            lit(cTau) * (col("x.n") + col("y.n")) - lit(1e-9))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
-              (col("x.n") + col("y.n")).as("s"))
-      .distinct()
-      .localCheckpoint(false)
-    // Exact verify over md5-derived 64-bit shingle-hash sets (the c2/p3
-    // convention — a cross-shingle collision is a 2^-64 corner), built
-    // ONLY for docs that appear in a surviving candidate pair.
-    val candDocs = survivors.select(col("a_id").as("doc_id"))
-      .union(survivors.select(col("b_id").as("doc_id")))
-      .distinct()
-    val docSets = ranked
-      .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("h")).as("hs"))
-    val inter = size(array_intersect(col("sa"), col("sb")))
-    survivors
-      .join(docSets.select(col("doc_id").as("a_id"), col("hs").as("sa")), "a_id")
-      .join(docSets.select(col("doc_id").as("b_id"), col("hs").as("sb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        round(inter.cast("double") / (col("s") - inter), 6).as("jaccard"))
-      .orderBy(col("jaccard").desc, col("a_id"), col("b_id"))
-      .limit(50)
-  }
-
   /** c4's BANDED candidate path (round 16 — the registered scale
     * form): MinHash-LSH candidate generation over the df-capped
     * shingle vocabulary, exact capped-Jaccard verification on the
     * candidates only — p3's verify-on-candidates shape pointed at
     * c4's metric. This is the fix for the round-15 measured weak
-    * mark: the PPJoin arm's candidate self-join volume is Σ df² over
-    * the sub-cap shingle population, which on a Heaps-widening Zipf
-    * vocabulary grew 19.1×/decade at ×1000 — super-linear, a
-    * 100 TB-killer — while c2's banded candidates measured ~8×/decade
+    * mark: the retired PPJoin prefix arm's candidate self-join volume
+    * is Σ df² over the sub-cap shingle population, which on a
+    * Heaps-widening Zipf vocabulary grew 19.1×/decade at ×1000 —
+    * super-linear, a 100 TB-killer — while c2's banded candidates measured ~8×/decade
     * (linear in corpus size: signatures are per-doc, band buckets are
     * cap-bounded, pairs expand in-array from sub-cap buckets only).
     *
@@ -566,7 +443,7 @@ object DedupOps {
     * hashes, the c2/p3 2^-64-collision convention), 6dp-rounded,
     * (jaccard desc, a, b) tiebreak, top-50 — so on any corpus where
     * the candidate stage is complete the output is byte-identical.
-    * Completeness here is the c2/p3 contract, not the prefix arm's
+    * Completeness here is the c2/p3 contract, not a deterministic
     * theorem: a τ=0.8 pair escapes all 32 bands with prob
     * (1−0.8⁴)³² ≈ 5e-8, and an OVER-CAP band bucket drops its
     * candidates wholesale. [[ngramJaccard]]'s auto guard therefore
@@ -582,8 +459,8 @@ object DedupOps {
                                              bucketCap: Int = 64)
       : (DataFrame, DataFrame) = {
     // per-doc surviving-shingle hash sets off the ONE capped index
-    // aggregation (the same (doc, h) rows the prefix arm ranks);
-    // three consumers — signature build + both verify sides
+    // aggregation; three consumers — signature build + both verify
+    // sides
     val sets = ngramJaccardIndex(spark, dir, dfCap)
       .select(TextFns.md5hash64(col("shingle")).as("h"),
               explode(col("ids")).as("doc_id"))
@@ -642,12 +519,8 @@ object DedupOps {
     * LSH escape (p3's disclosed contract); the guard fails closed on
     * everything else.
     *
-    * Knobs: SPARK_GRAFT_C4_TAU (default 0.8; a too-high τ means a
-    * fallback, never a wrong answer); SPARK_GRAFT_C4_MODE
-    * auto|banded|prefix|exhaustive pins a path for A/B measurement
-    * (ScaleBench/ZipfDedupBench carry the exhaustive and prefix arms
-    * as the scale foils; prefix keeps the deterministic-completeness
-    * theorem for corpora where an adversary controls cluster sizes).
+    * τ is the constant [[C4Tau]] = 0.8; a corpus whose top-50 does
+    * not reach it takes the fallback, never a wrong answer.
     *
     * Cost routing (round 17 — the round-16 verdict's "guard refusal
     * shouldn't cost a full wasted banded pass"): the auto path used to
@@ -676,43 +549,39 @@ object DedupOps {
     */
   def ngramJaccard(spark: SparkSession, dir: String,
                    dfCap: Int = 100): DataFrame = {
-    val tau = sys.env.get("SPARK_GRAFT_C4_TAU")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .filter(t => t > 0 && t < 1).getOrElse(0.8)
-    sys.env.getOrElse("SPARK_GRAFT_C4_MODE", "auto") match {
-      case "exhaustive" => ngramJaccardExhaustive(spark, dir, dfCap)
-      case "prefix"     => ngramJaccardPrefix(spark, dir, dfCap, tau)
-      case "banded"     => ngramJaccardBanded(spark, dir, dfCap)
-      case _ =>
-        // duplicate-head pre-check (bounded scalars; per-group pair
-        // count saturates at 50 before the multiply so the arithmetic
-        // can never overflow on a mega-group)
-        val head = docs(spark, dir)
-          .filter(col("text").isNotNull)
-          .groupBy(md5(col("text")).as("fp"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1)
-          .agg(coalesce(sum(when(col("n") >= 11, lit(50L))
-                 .otherwise((col("n") * (col("n") - 1) / 2).cast("long"))),
-                 lit(0L)).as("pairs"),
-               coalesce(max(col("n")), lit(0L)).as("maxg"))
-          .collect()(0)
-        val tryBanded = head.getLong(0) >= 50 && head.getLong(1) <= 64
-        if (!tryBanded) ngramJaccardExhaustive(spark, dir, dfCap)
-        else {
-          val (fast, overCap) = ngramJaccardBandedParts(spark, dir, dfCap)
-          val rows = fast.collect()
-          val complete = rows.length == 50 &&
-            rows.forall(_.getAs[Double]("jaccard") >= tau) &&
-            overCap.isEmpty
-          if (complete)
-            spark.createDataFrame(
-              new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
-              fast.schema)
-          else ngramJaccardExhaustive(spark, dir, dfCap)
-        }
+    // duplicate-head pre-check (bounded scalars; per-group pair count
+    // saturates at 50 before the multiply so the arithmetic can never
+    // overflow on a mega-group)
+    val head = docs(spark, dir)
+      .filter(col("text").isNotNull)
+      .groupBy(md5(col("text")).as("fp"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") > 1)
+      .agg(coalesce(sum(when(col("n") >= 11, lit(50L))
+             .otherwise((col("n") * (col("n") - 1) / 2).cast("long"))),
+             lit(0L)).as("pairs"),
+           coalesce(max(col("n")), lit(0L)).as("maxg"))
+      .collect()(0)
+    val tryBanded = head.getLong(0) >= 50 && head.getLong(1) <= 64
+    if (!tryBanded) ngramJaccardExhaustive(spark, dir, dfCap)
+    else {
+      val (fast, overCap) = ngramJaccardBandedParts(spark, dir, dfCap)
+      val rows = fast.collect()
+      val complete = rows.length == 50 &&
+        rows.forall(_.getAs[Double]("jaccard") >= C4Tau) &&
+        overCap.isEmpty
+      if (complete)
+        spark.createDataFrame(
+          new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
+          fast.schema)
+      else ngramJaccardExhaustive(spark, dir, dfCap)
     }
   }
+
+  /** c4's exactness-guard threshold: the banded arm's top-50 is
+    * trusted only when every row clears it.
+    */
+  private[graft] val C4Tau = 0.8
 
   /** c6: duplicate-CLUSTER assignment — connected components over the
     * chunk-fingerprint near-dup graph. Pair operators (c2–c5) stop at

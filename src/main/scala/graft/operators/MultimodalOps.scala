@@ -720,7 +720,7 @@ object MultimodalOps {
     * 64-bit-signature modality.
     */
   private def phashBandCols: Seq[org.apache.spark.sql.Column] =
-    graft.operators.DedupOps.simhashBandCols(col("phash"), 0, 0)
+    graft.operators.DedupOps.simhashBandCols(col("phash"))
 
   private def requireRadius(maxHamming: Int): Unit =
     require(maxHamming <= 3,

@@ -181,7 +181,7 @@ object SimOps {
     * is independent of corpus size; at real scale pick nlist ≈ √N
     * (the classic IVF sizing: cells of ~√N vectors each) — the
     * default 64 fits the test corpora (N ≤ 2000). Two recall levers,
-    * both measured in grid runs at sf0.1 (graft.tools.IvfGrid; the
+    * both measured in grid runs at sf0.1 (BASELINE.md "Recall"; the
     * nlist=64/nProbe=8/nAssign=4 default is the measured frontier
     * point: recall 0.793 at the same ~50 % scan fraction the old
     * 32/8/2 point spent for 0.743): soft corpus assignment
@@ -375,7 +375,7 @@ object SimOps {
     * cosine. At scale the expensive exact pass thus touches
     * rerank·k rows per query instead of every list member; ADC's
     * ranking error is absorbed by the rerank margin. rerank=16 chosen
-    * from a measured grid (graft.tools.PqGrid, re-run after the
+    * from a measured grid (BASELINE.md "Recall", re-run after the
     * round-7 fixed-codebook redesign): sf0.1 recall 0.588 / 0.672 /
     * 0.730 at rerank 4 / 8 / 16, i.e. rerank=16 sits essentially at
     * the 0.7425 ceiling the IVF routing itself sets, at unchanged

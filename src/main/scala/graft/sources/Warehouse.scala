@@ -172,8 +172,8 @@ object Warehouse {
   /** The resolved current state of a corpus namespace's landed
     * swap-managed tables: `tabs` maps logical base → physical base
     * (absent = the plain logical name), `postGen` is the posting
-    * index's generation when a manifest has recorded one (else the
-    * legacy post_meta column governs).
+    * index's generation — its one home, recorded by every build and
+    * compaction (absent = no posting index was ever built).
     */
   private[graft] case class Manifest(version: Long,
                                      tabs: Map[String, String],
@@ -624,9 +624,9 @@ object Warehouse {
     val emb = emb0
     // The build-once path defaults to Lloyd-REFINED coarse centroids
     // (kmeansIters=4): the refinement is a build-time cost amortized
-    // across every probe, and the measured sweeps (IvfGrid/KmSweep,
-    // sf0.1) buy recall 0.79 → 0.875 at identical probe cost (km=8
-    // adds only +0.0025 more — past the knee). The centroid set is
+    // across every probe, and the measured sweeps (BASELINE.md
+    // "Recall", sf0.1) buy recall 0.79 → 0.875 at identical probe
+    // cost (km=8 adds only +0.0025 more — past the knee). The centroid set is
     // PERSISTED with the index — a real IVF index ships its centroids;
     // probes read the ≤nlist-row table instead of re-deriving routing.
     val cents = SimOps.ivfCentroids(emb, nlistR, kmeansIters)
@@ -819,7 +819,7 @@ object Warehouse {
     * sample routing — the d12/d15 convention that keeps the DuckDB
     * replay exact); a production deployment builds refined centroids
     * once (the ensureIvf default km=4 — recall 0.79 → 0.875 at equal
-    * probe cost per the IvfGrid sweeps) and RecallAtScaleSpec floors
+    * probe cost per BASELINE.md "Recall") and RecallAtScaleSpec floors
     * BOTH arms' label agreement against the exact d16.
     */
   /** `nlist` (default 64 — the registered/oracled config): at a fixed
@@ -1386,16 +1386,13 @@ object Warehouse {
     // compactions: stats deltas (deleteDocs) are tagged with the
     // (build_key, gen) they correct, and ANY new generation makes
     // superseded deltas inert — a rebuild at the same params must not
-    // re-subtract deltas for docs it already excluded below.
-    val nextGen =
-      if (spark.catalog.tableExists(tbl(dir, "graft_post_meta")))
-        postingsIdentity(spark, dir)._2 + 1L
-      else 0L
+    // re-subtract deltas for docs it already excluded below. The
+    // manifest is its one home (see postingsIdentity).
+    val nextGen = readManifest(spark, dir).postGen.fold(0L)(_ + 1L)
     dropManaged(spark, Seq(tbl(dir, "graft_post_lists"), tbl(dir, "graft_post_stats"),
                            tbl(dir, "graft_post_meta")))
     // a rebuild supersedes any compacted generation: GC its versioned
-    // physicals and move the authoritative generation (manifest-first,
-    // see postingsIdentity) to this build's in one commit
+    // physicals and move the generation to this build's in one commit
     resetSwapTabs(spark, dir, Seq("graft_post_lists", "graft_post_stats"),
                   postGen = Some(nextGen))
     // rebuilds physically exclude live-tombstoned docs (the new
@@ -1428,8 +1425,8 @@ object Warehouse {
       .format("parquet")
       .saveAsTable(tbl(dir, "graft_post_stats"))
     import spark.implicits._
-    Seq((postingsBuildKey(dir, excludeMod), nextGen))
-      .toDF("build_key", "gen")
+    Seq(postingsBuildKey(dir, excludeMod))
+      .toDF("build_key")
       .write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(tbl(dir, "graft_post_meta"))
   }
@@ -1454,14 +1451,14 @@ object Warehouse {
     val key = postingsBuildKey(dir, excludeMod)
     val fresh = spark.catalog.tableExists(tbl(dir, "graft_post_meta")) &&
       spark.catalog.tableExists(tbl(dir, listsPhys)) &&
-      spark.catalog.tableExists(tbl(dir, statsPhys)) && {
-        val m = spark.table(tbl(dir, "graft_post_meta"))
-        // a pre-round-14 meta (no gen column) is a stale physical
-        // format: rebuild rather than guessing a generation
-        m.columns.contains("gen") && {
-          val r = m.select(col("build_key")).collect()
-          r.length == 1 && r(0).getString(0) == key
-        }
+      spark.catalog.tableExists(tbl(dir, statsPhys)) &&
+      // every build records its generation in the manifest: a store
+      // without one was never built through it, so rebuild rather
+      // than guess
+      m0.postGen.isDefined && {
+        val r = spark.table(tbl(dir, "graft_post_meta"))
+          .select(col("build_key")).collect()
+        r.length == 1 && r(0).getString(0) == key
       } &&
       // an excl=0 build admits NO legitimate upserts (round-13 advice):
       // a batch partition on top of a full build double-counts its
@@ -1679,8 +1676,7 @@ object Warehouse {
     val rows = newIds
       .select(col("doc_id"), lit(scope).as("scope"),
               lit(batchKey).as("batch_id"))
-    writePartitioned(spark, dir, "graft_tombstones", rows,
-                     Seq("scope", "batch_id"))
+    writePartitioned(spark, dir, "graft_tombstones", rows)
     // postings stats delta (only meaningful when a posting index is
     // landed): subtract exactly what is PHYSICALLY INDEXED for these
     // ids — a doc absent from the postings (never indexed, or already
@@ -1703,8 +1699,7 @@ object Warehouse {
         .select(col("n_docs"), col("sum_dl"), lit(bkey).as("bkey"),
                 lit(gen).as("gen"), lit(scope).as("scope"),
                 lit(batchKey).as("batch_id"))
-      writePartitioned(spark, dir, "graft_tomb_stats", d,
-                       Seq("scope", "batch_id"))
+      writePartitioned(spark, dir, "graft_tomb_stats", d)
     }
     }
     }
@@ -1717,8 +1712,9 @@ object Warehouse {
     deleteDocs(spark, dir, ids.toDF("doc_id"), scope, batchKey)
   }
 
-  /** Tombstone-table schemas for cross-JVM recovery (see
-    * [[recoverTombTable]]).
+  /** Pinned tombstone-table schemas: the first write creates the
+    * table from them and cross-JVM recovery re-registers it with them
+    * ([[writePartitioned]], [[recoverTombTable]]).
     */
   private val tombSchemas: Map[String, (String, String)] = Map(
     "graft_tombstones" -> ("doc_id BIGINT, scope STRING, batch_id BIGINT",
@@ -1727,83 +1723,72 @@ object Warehouse {
                              "gen BIGINT, scope STRING, batch_id BIGINT",
                            "scope, batch_id"))
 
+  /** Register a tombstone table from its pinned schema at its
+    * warehouse location; a no-op when the name is already registered.
+    */
+  private def createTombTable(spark: SparkSession, dir: String,
+                              base: String, phys: String): Unit = {
+    val loc = new Path(warehousePath(spark), tbl(dir, phys))
+    val (cols, parts) = tombSchemas(base)
+    spark.sql(s"CREATE TABLE IF NOT EXISTS ${tbl(dir, phys)} ($cols) " +
+      s"USING parquet PARTITIONED BY ($parts) " +
+      s"LOCATION '${fsOf(spark, loc).makeQualified(loc)}'")
+  }
+
   /** True iff the tombstone table is catalog-visible, RECOVERING it
     * first when only its files survived a previous JVM (the in-memory
     * catalog forgets tables across sessions; every other landed table
     * is rebuilt by its gate, but silently recreating THIS one would
     * silently UN-DELETE every tombstoned doc — the one state loss that
     * must never happen, so the surviving location is re-registered and
-    * its partitions recovered instead).
+    * its partitions recovered instead). Only a COMMITTED location is
+    * registered ([[committedLoc]], the [[adoptLanded]] rule): a write
+    * still in flight is not yet a tombstone set, and registering its
+    * location raced the writer's own table creation.
     */
   private def recoverTombTable(spark: SparkSession, dir: String,
                                base: String): Boolean = {
-    val wh = warehousePath(spark)
-    val fs = fsOf(spark, wh)
-    // stage-awareness (round-15 advice fix): a crash inside a LEGACY
-    // stage-and-rewrite swap of this table leaves its only committed
-    // copy in <base>_stage — roll the maintenance layer forward before
-    // concluding "no tombstones" (which would silently un-delete);
-    // manifest-committed swaps never enter this branch (the standing
-    // generation is immutable until the commit)
-    if (fs.exists(new Path(wh, tbl(dir, s"${base}_stage")))) {
-      recoverMaintenance(spark, dir)
-      ()
-    }
     val phys = physBase(readManifest(spark, dir), base)
     spark.catalog.tableExists(tbl(dir, phys)) || {
-      val loc = new Path(wh, tbl(dir, phys))
-      fs.exists(loc) && {
-        val (cols, parts) = tombSchemas(base)
-        spark.sql(s"CREATE TABLE ${tbl(dir, phys)} ($cols) USING parquet " +
-          s"PARTITIONED BY ($parts) LOCATION '${fs.makeQualified(loc)}'")
+      val loc = new Path(warehousePath(spark), tbl(dir, phys))
+      committedLoc(fsOf(spark, loc), loc) && {
+        createTombTable(spark, dir, base, phys)
         spark.catalog.recoverPartitions(tbl(dir, phys))
         true
       }
     }
   }
 
-  /** Create-or-dynamic-overwrite a (scope, batch_id)-partitioned
-    * maintenance table: first write creates it partitioned; later
-    * writes replace exactly the partitions present in `rows` (the
+  /** Dynamic-overwrite a (scope, batch_id)-partitioned tombstone
+    * table, creating it from its pinned schema on the first write:
+    * each write replaces exactly the partitions present in `rows` (the
     * upsertIvfFrom exactly-once contract).
     */
   private def writePartitioned(spark: SparkSession, dir: String,
-                               base: String, rows: DataFrame,
-                               parts: Seq[String]): Unit = {
+                               base: String, rows: DataFrame): Unit = {
     val phys = physBase(readManifest(spark, dir), base)
-    if (!recoverTombTable(spark, dir, base)) {
-      rows.write.mode(SaveMode.Overwrite)
-        .partitionBy(parts: _*)
-        .format("parquet")
-        .saveAsTable(tbl(dir, phys))
-    } else {
-      val owKey = "spark.sql.sources.partitionOverwriteMode"
-      val prior = spark.conf.get(owKey)
-      spark.conf.set(owKey, "dynamic")
-      try rows.write.mode(SaveMode.Overwrite).insertInto(tbl(dir, phys))
-      finally spark.conf.set(owKey, prior)
-    }
+    if (!recoverTombTable(spark, dir, base))
+      createTombTable(spark, dir, base, phys)
+    val owKey = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.get(owKey)
+    spark.conf.set(owKey, "dynamic")
+    try rows.write.mode(SaveMode.Overwrite).insertInto(tbl(dir, phys))
+    finally spark.conf.set(owKey, prior)
   }
 
   /** The landed posting index's identity: (build_key, gen). gen counts
-    * physical generations — 0 at build, +1 per compaction — so stats
-    * deltas tagged with a superseded generation are inert (the
+    * physical generations — monotone across builds, +1 per compaction —
+    * so stats deltas tagged with a superseded generation are inert (the
     * generation that replaced them already folded or purged what they
-    * corrected).
+    * corrected). gen lives only in the manifest: a compaction bumps it
+    * IN THE SAME atomic commit that swaps the folded stats, so readers
+    * can never pair new stats with an old gen.
     */
   private[graft] def postingsIdentity(spark: SparkSession,
-                                      dir: String): (String, Long) = {
-    val m = spark.table(tbl(dir, "graft_post_meta"))
-    val r = m.select(col("build_key"),
-                     (if (m.columns.contains("gen")) col("gen")
-                      else lit(0L)).as("gen")).collect()(0)
-    // manifest-first generation: a compaction bumps gen IN THE SAME
-    // atomic commit that swaps the folded stats, so readers can never
-    // pair new stats with an old gen (the round-14 two-write window);
-    // post_meta's column governs only pre-manifest (legacy) stores
-    (r.getString(0),
-     readManifest(spark, dir).postGen.getOrElse(r.getLong(1)))
-  }
+                                      dir: String): (String, Long) =
+    (spark.table(tbl(dir, "graft_post_meta")).select(col("build_key"))
+       .collect()(0).getString(0),
+     readManifest(spark, dir).postGen.getOrElse(0L))
 
   /** The scope-filtered deletion stats deltas, recovered across JVMs
     * like the tombstones themselves — None when nothing was ever
@@ -2368,19 +2353,10 @@ object Warehouse {
 
   // ---------- maintenance: crash recovery + auto policy (round 14) ----------
 
-  /** LEGACY stage-swap registry: base name → (partition columns,
-    * bucket column) — the registry [[recoverMaintenance]] needs to
-    * finish an interrupted swap. Partition-column types are pinned in
-    * [[PartTypes]] (directory-name inference would narrow `batch_id=-1`
-    * to int and break the positional insertInto contract of the upsert
-    * paths).
+  /** Pinned partition-column types for adoption: directory-name
+    * inference would narrow `batch_id=-1` to int and break the
+    * positional insertInto contract of the upsert paths.
     */
-  private val SwapManaged: Seq[(String, Seq[String], Option[String])] = Seq(
-    ("graft_post_lists", Seq("batch_id", "tb"), Some("tb")),
-    ("graft_post_stats", Seq("batch_id"), None),
-    ("graft_ivf_lists", Seq("batch_id", "cent_id"), None),
-    ("graft_tombstones", Seq("scope", "batch_id"), None))
-
   private val PartTypes: Map[String, String] = Map(
     "batch_id" -> "bigint", "tb" -> "bigint",
     "cent_id" -> "bigint", "scope" -> "string")
@@ -2507,39 +2483,22 @@ object Warehouse {
     }
   }
 
-  /** Crash recovery for an interrupted LEGACY stage swap (compaction
-    * or vacuum): the plain-parquet stand-in for a table format's
-    * atomic snapshot commit stages the folded rows to `<base>_stage`,
-    * drops the base, rewrites it, drops the stage — so a crash between
-    * the drop and the rewrite leaves the ONLY copy of the table in the
-    * stage, and a rebuild-from-corpus could NOT recover it (upserted /
-    * streamed batches never existed in the corpus dir). Location-
-    * driven, like [[recoverTombTable]], because the in-memory catalog
-    * forgets tables across JVMs:
+  /** Crash recovery for the manifest protocol: maintenance swaps
+    * commit through the atomic manifest ([[commitGenerations]]) and
+    * never touch the standing generation, so a crash leaves probes
+    * correct and only bounded garbage behind, collected here:
     *
-    *  - committed base + surviving stage → the crash happened before
-    *    the drop (or after the rewrite): roll BACK by dropping the
-    *    stage, the base is intact;
-    *  - missing/uncommitted base + committed stage → the crash
-    *    happened inside the swap: roll FORWARD — rewrite the base from
-    *    the stage (partition types re-pinned per [[PartTypes]]; the
-    *    inference off a `batch_id=-1` directory name would narrow the
-    *    column and break upsert insertInto positionality), then drop
-    *    the stage.
-    *
-    * Round 15: maintenance swaps now commit through the atomic
-    * manifest ([[commitGenerations]]) and never stage-drop-rewrite, so
-    * the roll-forward/back arms below serve only LEGACY crash states
-    * (a pre-manifest deployment's stage surviving an upgrade). What
-    * the manifest protocol leaves behind on a crash is bounded
-    * garbage, collected here: staged generation tables never
-    * committed (crash before the link) and superseded generations
-    * never dropped (crash between the link and the GC) — both
-    * identified as version-suffixed physicals the manifest does not
-    * currently name; probes are correct throughout either way.
+    *  - `gc-orphan`: staged generation tables never committed (crash
+    *    before the link) and superseded generations outside the
+    *    snapshot-retention window — version-suffixed physicals no
+    *    manifest version in the window names;
+    *  - `gc-superseded`: a plain-named generation the store's first
+    *    swap re-addressed, once the whole window maps it elsewhere;
+    *  - `gc-commit-tmp`: manifest commit temp files older than 10
+    *    minutes (crash between the temp write and the link).
     *
     * Called by every maintenance entrypoint and the ensure* gates;
-    * costs one directory listing when nothing crashed. Returns the
+    * costs a few directory listings when nothing crashed. Returns the
     * actions taken.
     */
   def recoverMaintenance(spark: SparkSession, dir: String): Seq[String] = {
@@ -2571,7 +2530,7 @@ object Warehouse {
     val suffix = s"_${ns(dir)}"
     val Versioned = ("(graft_[a-z_]+__v(\\d+))" +
       java.util.regex.Pattern.quote(suffix)).r
-    val gced = listDir(fs, wh)
+    listDir(fs, wh)
       .flatMap(f => f.getPath.getName match {
         case Versioned(physBaseName, v)
             if v.toLong <= m.version &&
@@ -2604,54 +2563,6 @@ object Warehouse {
           fs.delete(f.getPath, false)
           s"gc-commit-tmp ${f.getPath.getName}"
         }
-    gced ++ SwapManaged.flatMap { case (base, parts, bucketCol) =>
-      val stageT = tbl(dir, s"${base}_stage")
-      val stageLoc = new Path(wh, stageT)
-      if (!fs.exists(stageLoc)) None
-      else {
-        val baseT = tbl(dir, base)
-        val baseLoc = new Path(wh, baseT)
-        if (committedLoc(fs, baseLoc)) {
-          dropManaged(spark, Seq(stageT))
-          Some(s"dropped-stage $baseT")
-        } else if (committedLoc(fs, stageLoc)) {
-          dropManaged(spark, Seq(baseT)) // partial rewrite / catalog ghost
-          scala.util.Try(spark.read.parquet(stageLoc.toString)) match {
-            case scala.util.Success(raw) =>
-              val typed = parts.foldLeft(raw) { (df, p) =>
-                df.withColumn(p, col(p).cast(PartTypes(p)))
-              }
-              val staged = bucketCol match {
-                case Some(c) => typed.repartition(col(c))
-                case None    => typed
-              }
-              staged.write.mode(SaveMode.Overwrite)
-                .partitionBy(parts: _*)
-                .format("parquet")
-                .saveAsTable(baseT)
-              dropManaged(spark, Seq(stageT))
-              Some(s"rolled-forward $baseT")
-            case scala.util.Failure(_) if tombSchemas.contains(base) =>
-              // committed-but-EMPTY stage (only _SUCCESS): legitimate
-              // when a vacuum pruned every tombstone — roll forward to
-              // an empty table from the pinned schema (no footers to
-              // infer from); other stores never fold to empty
-              val (cols2, parts2) = tombSchemas(base)
-              spark.sql(s"CREATE TABLE $baseT ($cols2) USING parquet " +
-                s"PARTITIONED BY ($parts2)")
-              dropManaged(spark, Seq(stageT))
-              Some(s"rolled-forward-empty $baseT")
-            case scala.util.Failure(_) =>
-              Some(s"unrecoverable $baseT")
-          }
-        } else {
-          // both uncommitted: unreachable by the swap's write order
-          // (the stage commits before the base is touched) — report,
-          // touch nothing
-          Some(s"unrecoverable $baseT")
-        }
-      }
-    }
   }
 
   /** One row per landed incremental store: landed batch partitions,
@@ -2697,7 +2608,7 @@ object Warehouse {
   }
 
   /** The maintenance policy over [[maintenanceStatus]]'s facts: first
-    * finish any interrupted swap ([[recoverMaintenance]]), then
+    * collect crash leftovers ([[recoverMaintenance]]), then
     * compact a store when its upsert-batch partitions exceed
     * `maxBatches` (the small-file bound) or at least `minPurge`
     * live-tombstoned ids are still physically present (the deferred

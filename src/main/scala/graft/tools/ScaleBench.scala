@@ -146,8 +146,8 @@ object ScaleBench {
          () => graft.operators.DedupOps.semDedupHier(spark, scaled,
            nlist = (64 * math.sqrt(factor)).round.toInt)),
         // c4's exhaustive arm as the A/B foil for the registered
-        // adaptive query (which picks the PPJoin-style positional path
-        // at scale): the standing round-10 48.7×/59× points were this
+        // adaptive query (which picks the banded candidate path at
+        // scale): the standing round-10 48.7×/59× points were this
         // arm, so the pair stays comparable round-over-round
         ("c4_ngram_jaccard_exhaustive", "base",
          () => graft.operators.DedupOps.ngramJaccardExhaustive(spark, base)),

@@ -10,11 +10,13 @@ import graft.operators.{DedupOps, PipelineOps}
   * vocabulary — and Zipf specifically stresses this family, because
   * stopword-dominated shingle sets concentrate band buckets toward the
   * CappedDistinctAgg cap (the mechanism that silently collapsed f6's
-  * recall at ×100 in round 11) and change c4's prefix-filter
-  * selectivity. This tool re-measures the family on a GenZipf corpus
-  * pair and reports the BAND-BUCKET OCCUPANCY distribution alongside
-  * the timings, so the artifact shows not just the cost curve but the
-  * cap pressure it was measured under.
+  * recall at ×100 in round 11). This tool re-measures the family's
+  * shipped forms on a GenZipf corpus pair and reports the BAND-BUCKET
+  * OCCUPANCY distribution alongside the timings, so the artifact shows
+  * not just the cost curve but the cap pressure it was measured under.
+  * The retired foils (c3's contiguous 8×8 and 4×16 layouts, c4's
+  * PPJoin prefix arm) are gone from the code; their curves stay
+  * recorded in `BENCH_dev_r16_zipf*` and `BENCH_dev_r17_zipf.json`.
   *
   * Run: `sbt "runMain graft.tools.ZipfDedupBench <baseDir> <scaledDir>
   * [repeats=2]"` after GenZipf into both dirs (GenScale first when the
@@ -38,24 +40,7 @@ object ZipfDedupBench {
       // p11b's standing index lands untimed (the ScaleBench prep
       // convention) — the probe is the measured production path
       Warehouse.ensureMinhash(spark, dir)
-      // round 16: c3 default is now the Manku C(6,3) block-combination
-      // banding and c4's auto path is the banded-candidate arm — the
-      // registered rows measured here ARE the scale-true forms. The
-      // retired defaults (c3 8×8 and 4×16 contiguous, c4
-      // prefix/PPJoin) stay measurable as foils behind
-      // SPARK_GRAFT_ZIPF_FOILS=1 so the curves they were retired for
-      // remain reproducible without paying their super-linear cost on
-      // every run.
-      val foils =
-        if (!sys.env.get("SPARK_GRAFT_ZIPF_FOILS").contains("1"))
-          Map.empty[String, Double]
-        else Map(
-          "c3_8x8_zipf"    -> time(DedupOps.dedupSimhash(spark, dir,
-                                     bands = 8, bits = 8)),
-          "c3_4x16_zipf"   -> time(DedupOps.dedupSimhash(spark, dir,
-                                     bands = 4, bits = 16)),
-          "c4_prefix_zipf" -> time(DedupOps.ngramJaccardPrefix(spark, dir)))
-      foils ++ Map(
+      Map(
         "c2_zipf"   -> time(DedupOps.dedupMinhash(spark, dir)),
         "c3_zipf"   -> time(DedupOps.dedupSimhash(spark, dir)),
         "c4_zipf"   -> time(DedupOps.ngramJaccard(spark, dir)),
@@ -86,18 +71,15 @@ object ZipfDedupBench {
         s""""over_cap64":${stats.getLong(4)}}"""
     }
 
-    /** c3's banding-layer occupancy: over_cap64 = 0 is a direct
-      * pigeonhole proof that NO hamming ≤ 3 pair can be cap-dropped at
-      * this corpus size — recall 1.0 without planting. Reported for
-      * the default C(6,3) layout AND the retired contiguous foils, so
-      * the artifact shows the collapse the defaults were moved off of
-      * (a 4×16 over_cap64 > 0 at ×1000 IS the ~4M-doc collapse).
+    /** c3's banding-layer occupancy under the C(6,3) layout:
+      * over_cap64 = 0 is a direct pigeonhole proof that NO hamming ≤ 3
+      * pair can be cap-dropped at this corpus size — recall 1.0
+      * without planting.
       */
-    def c3Occupancy(dir: String, bands: Int, bits: Int,
-                    weighted: Boolean = false): String = {
+    def c3Occupancy(dir: String, weighted: Boolean): String = {
       // `weighted` = the SHIPPED c3 signature since round 17; the
-      // unweighted kernel stays for the retired-foil rows, whose
-      // occupancy is exactly what they were retired for
+      // unweighted kernel's row shows the bit concentration the
+      // weighting was introduced against
       val sigs =
         if (weighted)
           DedupOps.simhashWeightedSigsFrom(
@@ -106,7 +88,7 @@ object ZipfDedupBench {
         else spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("text").isNotNull)
           .select(graft.functions.TextFns.simhash64Kernel(col("text")).as("sig"))
-      val cols = DedupOps.simhashBandCols(col("sig"), bands, bits)
+      val cols = DedupOps.simhashBandCols(col("sig"))
       val stats = sigs
         .select(explode(array(cols: _*)).as("bk"))
         .groupBy(col("bk.band"), col("bk.bkey"))
@@ -120,10 +102,8 @@ object ZipfDedupBench {
         s""""p99":${stats.getLong(2)},"over_cap64":${stats.getLong(3)}}"""
     }
     def c3OccAll(dir: String): String =
-      s"""{"default":${c3Occupancy(dir, 0, 0, weighted = true)},""" +
-        s""""foil_unweighted":${c3Occupancy(dir, 0, 0)},""" +
-        s""""foil_4x16":${c3Occupancy(dir, 4, 16)},""" +
-        s""""foil_8x8":${c3Occupancy(dir, 8, 8)}}"""
+      s"""{"default":${c3Occupancy(dir, weighted = true)},""" +
+        s""""foil_unweighted":${c3Occupancy(dir, weighted = false)}}"""
 
     val b = measure(base)
     val s2 = measure(scaled)

@@ -129,12 +129,12 @@ class DedupOpsSpec extends SparkSpec {
     }
   }
 
-  test("c4 prefix arm: byte-identical to exhaustive when the τ-guard holds (planted completeness)") {
-    // ≥50 planted near-dup pairs with J ≥ τ=0.5, so the prefix fast
-    // path's exactness guard passes and the auto path must take it —
-    // this is the planted-pair completeness proof for the prefix-filter
-    // theorem: if the prefix candidate generation missed ANY qualifying
-    // pair, the top-50 could not match the exhaustive arm's.
+  test("c4 banded arm: byte-identical to exhaustive when the τ-guard holds (planted completeness)") {
+    // ≥50 planted near-dup pairs with J ≥ τ=0.8, no mega-cluster, so
+    // the banded arm's exactness guard holds — the planted-pair
+    // completeness check for the LSH candidate stage: if banding missed
+    // ANY qualifying pair, the top-50 could not match the exhaustive
+    // arm's.
     val vocab = (0 until 400).map(i => s"w$i")
     val rnd = new scala.util.Random(7)
     def mkDoc(): String = Seq.fill(60)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
@@ -156,24 +156,19 @@ class DedupOpsSpec extends SparkSpec {
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"), r.getAs[Double]("jaccard")))
     val exh = rowsOf(DedupOps.ngramJaccardExhaustive(spark, dir))
-    val pre = rowsOf(DedupOps.ngramJaccardPrefix(spark, dir))
-    assert(pre.length == 50 && pre.forall(_._3 >= 0.5),
-      "guard precondition not met — corpus has <50 pairs at τ")
-    assert(pre.sameElements(exh),
-      s"prefix arm diverges from exhaustive: ${pre.toSeq.diff(exh.toSeq)}")
-    // the banded arm (round 16's registered fast path) must agree
-    // byte-for-byte on a corpus where its guard passes: 60 planted
-    // J≈0.9 pairs, no mega-cluster, so LSH surfaces every top-50 pair
-    // and no band bucket exceeds the cap
     val banded = rowsOf(DedupOps.ngramJaccardBanded(spark, dir))
+    assert(banded.length == 50 && banded.forall(_._3 >= DedupOps.C4Tau),
+      "guard precondition not met — corpus has <50 pairs at τ")
+    // 60 planted J≈0.9 pairs, no mega-cluster: LSH surfaces every
+    // top-50 pair and no band bucket exceeds the cap
     assert(banded.sameElements(exh),
       s"banded arm diverges from exhaustive: ${banded.toSeq.diff(exh.toSeq)}")
-    // the auto path must return the identical rows (fast path taken)
+    // the auto path must return the identical rows
     val auto = rowsOf(DedupOps.ngramJaccard(spark, dir))
     assert(auto.sameElements(exh))
     // every planted pair the exhaustive top-50 surfaces is found
     val planted = (0 until 60).map(i => (i.toLong, (100 + i).toLong)).toSet
-    val got = pre.map(r => (r._1, r._2)).toSet
+    val got = banded.map(r => (r._1, r._2)).toSet
     assert(got.subsetOf(planted),
       "top-50 should be planted pairs only on this corpus")
   }

@@ -97,6 +97,42 @@ class DeletionSpec extends SparkSpec {
       "overlapping delete batches corrupted the stats delta")
   }
 
+  test("first delete vs a probe: an in-flight tombstone write is never registered") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_delrace_").toString
+    Files.copy(Paths.get(sf, "documents.parquet"),
+               Paths.get(dir, "documents.parquet"))
+    Warehouse.ensurePostings(spark, dir)
+    val victim = Warehouse.bm25Indexed(spark, dir)
+      .select(col("doc_id")).orderBy(col("doc_id")).limit(1)
+      .collect()(0).getLong(0)
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val tomb = Warehouse.tbl(dir, "graft_tombstones")
+    val loc = new java.io.File(wh, tomb)
+    // what the store's first delete leaves mid-write: the location
+    // exists, its job has not committed (`_temporary/`, no `_SUCCESS`)
+    val attempt = new java.io.File(loc,
+      "_temporary/0/_temporary/attempt_0/scope=live/batch_id=0")
+    assert(attempt.mkdirs() &&
+           new java.io.File(attempt, "part-00000.parquet").createNewFile())
+    assert(Warehouse.tombstoneIds(spark, dir, Warehouse.LiveScope).isEmpty,
+      "a probe read an uncommitted tombstone write as the tombstone set")
+    assert(!spark.catalog.tableExists(tomb),
+      "a probe registered the in-flight location (the writer's own " +
+        "table creation then fails with TABLE_OR_VIEW_ALREADY_EXISTS)")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(loc)
+    // on a clean location the first delete lands and hides the doc
+    Warehouse.deleteDocIds(spark, dir, Seq(victim))
+    assert(Warehouse.tombstoneIds(spark, dir, Warehouse.LiveScope).get
+             .collect().map(_.getLong(0)).toSeq == Seq(victim))
+    assert(Warehouse.bm25Indexed(spark, dir)
+             .filter(col("doc_id") === victim).isEmpty,
+      "the first delete did not hide the doc from the BM25 probe")
+  }
+
   test("IVF: deleted vectors leave every landed ANN surface; compactIvf purge is probe-identical") {
     Warehouse.ensureIvf(spark, tmpDir, kmeansIters = 0)
     val victims = Warehouse.annIndexed(spark, tmpDir)

@@ -44,7 +44,7 @@ class DeterminismSpec extends SparkSpec {
     "b50_transactions_union", "b54_sorted_price_desc",
     "d13_ann_ivf_fixedq", "d14_ann_ivfpq_fixedq",
     "e14_bpe_token_stats",
-    // round 11: the adaptive positional-filter candidate join (top-50
+    // round 11: c4's adaptive candidate path (top-50
     // Jaccard cut boundary ties + the exactness-guard arm choice must
     // not depend on partitioning), the rewritten banding family's
     // in-array pair expansion (c5 joins embeddings back once per

@@ -4,16 +4,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.RetrievalOps
 import graft.sources.{Tables, Warehouse}
 
-/** Round-14 maintenance-hardening contract (the residue the compaction
-  * work left open):
+/** Maintenance-hardening contract:
   *
-  *  - an interrupted LEGACY stage swap (pre-round-15 crash between the
-  *    drop and the rewrite) is rolled FORWARD from the surviving stage
-  *    — the stage holds the ONLY copy of upserted/streamed batches,
-  *    which a rebuild-from-corpus could never recover (they were never
-  *    in the corpus dir);
-  *  - a stage surviving NEXT TO a committed base (pre-drop crash) is
-  *    rolled back by dropping the stage, base untouched;
+  *  - crash recovery collects what the manifest protocol can leave
+  *    behind — stale commit temp files and uncommitted generation
+  *    tables — and is idempotent;
   *  - the compaction quiet-point contract is enforced: a concurrent
   *    upsert landing mid-fold aborts the compaction with the standing
   *    table AND the new batch intact;
@@ -66,60 +61,33 @@ class MaintenanceSpec extends SparkSpec {
     spark.sql(s"SHOW PARTITIONS ${Warehouse.currentTable(spark, dir, base)}")
       .collect().map(_.getString(0)).toSet
 
-  test("interrupted swap rolls forward: upserted batches survive where a rebuild would lose them") {
-    val dir = corpusCopy(withEmb = false)
-    Warehouse.ensurePostings(spark, dir, excludeMod = 2)
-    // a STREAMED-IN doc: never present in the corpus dir, so any
-    // recovery that falls back to rebuild-from-corpus silently loses it
-    Warehouse.upsertPostingsFrom(
-      syntheticDocs(Seq(999999001L), "zzmaintq"), dir, batchKey = 3L)
-    val probe0 = strs(RetrievalOps.bm25RankIndexed(
-      spark, dir, qterm("zzmaintq"), k = 5, exclSelf = false))
-    assert(probe0.nonEmpty && probe0.exists(_.contains("999999001")),
-      "fixture: upserted doc must be probe-visible before the crash")
-    assert(Tables.documents(spark, dir)
-             .filter(col("doc_id") === 999999001L).isEmpty,
-      "fixture: the upserted doc must NOT be in the corpus dir")
-
-    // simulate the crash window: stage committed, base dropped, JVM died
-    val base = Warehouse.tbl(dir, "graft_post_lists")
-    val stage = Warehouse.tbl(dir, "graft_post_lists_stage")
-    spark.table(base).write.partitionBy("batch_id", "tb")
-      .format("parquet").saveAsTable(stage)
-    spark.sql(s"DROP TABLE $base") // managed: catalog AND location go
-
-    val actions = Warehouse.recoverMaintenance(spark, dir)
-    assert(actions.exists(_.startsWith("rolled-forward")),
-      s"expected a roll-forward, got $actions")
-    assert(!spark.catalog.tableExists(stage), "stage must be dropped")
-    val probe1 = strs(RetrievalOps.bm25RankIndexed(
-      spark, dir, qterm("zzmaintq"), k = 5, exclSelf = false))
-    assert(probe1 == probe0,
-      "rolled-forward index must answer exactly as before the crash")
-    // the upsert batch partition physically survived
-    assert(partitions(dir, "graft_post_lists").exists(_.startsWith("batch_id=3/")),
-      "upsert batch partition lost in recovery")
-    // the freshness gate adopts the recovered index (no rebuild: the
-    // batch partition would not survive a buildPostings)
-    Warehouse.ensurePostings(spark, dir, excludeMod = 2)
-    assert(partitions(dir, "graft_post_lists").exists(_.startsWith("batch_id=3/")),
-      "ensurePostings rebuilt over the recovered index")
-  }
-
-  test("stage next to a committed base rolls back: stage dropped, base untouched") {
+  test("recovery GC: stale commit temps and uncommitted generations go, fresh temps stay") {
     val dir = corpusCopy(withEmb = false)
     Warehouse.ensurePostings(spark, dir)
-    val files0 = tableFiles(dir, "graft_post_lists")
-    val base = Warehouse.tbl(dir, "graft_post_lists")
-    val stage = Warehouse.tbl(dir, "graft_post_lists_stage")
-    spark.table(base).write.partitionBy("batch_id", "tb")
-      .format("parquet").saveAsTable(stage)
+    val version = Warehouse.readManifest(spark, dir).version
+    assert(version >= 1L, "fixture: the build must commit a manifest version")
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val mdir = new java.io.File(wh, s"_graft_manifest_${Warehouse.ns(dir)}")
+    // a crash between a commit's temp write and its link leaks the
+    // temp; one written just now may belong to an in-flight commit
+    val stale = new java.io.File(mdir, "commit_stale.tmp")
+    val fresh = new java.io.File(mdir, "commit_fresh.tmp")
+    assert(stale.createNewFile() && fresh.createNewFile())
+    assert(stale.setLastModified(System.currentTimeMillis() - 11 * 60 * 1000L))
+    // a generation staged at a version the manifest has already
+    // passed but never committed (crash before the link)
+    val orphan = Warehouse.tbl(dir, s"graft_post_lists__v$version")
+    spark.table(Warehouse.tbl(dir, "graft_post_lists")).limit(1)
+      .write.partitionBy("batch_id", "tb").format("parquet")
+      .saveAsTable(orphan)
+
     val actions = Warehouse.recoverMaintenance(spark, dir)
-    assert(actions.exists(_.startsWith("dropped-stage")),
-      s"expected a stage drop, got $actions")
-    assert(!spark.catalog.tableExists(stage))
-    assert(tableFiles(dir, "graft_post_lists") == files0,
-      "roll-back must not touch the committed base")
+    assert(actions.toSet == Set("gc-commit-tmp commit_stale.tmp",
+                                s"gc-orphan $orphan"), s"got $actions")
+    assert(!stale.exists(), "stale commit temp survived")
+    assert(fresh.exists(), "a fresh commit temp must never be swept")
+    assert(!spark.catalog.tableExists(orphan) &&
+           !new java.io.File(wh, orphan).exists(), "orphan generation survived")
     assert(Warehouse.recoverMaintenance(spark, dir).isEmpty,
       "recovery must be idempotent")
   }
@@ -168,29 +136,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(ex2.getMessage.contains("concurrent upsert"))
     assert(partitions(dir, "graft_ivf_lists").exists(_.startsWith("batch_id=9/")),
       "guard abort lost the racing IVF batch")
-  }
-
-  test("empty-stage roll-forward: a vacuum that pruned every tombstone recovers to an empty table") {
-    val dir = corpusCopy(withEmb = false)
-    // the crash state: a committed stage holding ZERO rows (only the
-    // _SUCCESS marker survives — no parquet footers to infer from),
-    // base gone — what a crash inside a prune-everything vacuum leaves
-    val stage = Warehouse.tbl(dir, "graft_tombstones_stage")
-    spark.sql(s"CREATE TABLE $stage (doc_id BIGINT, scope STRING, " +
-      "batch_id BIGINT) USING parquet PARTITIONED BY (scope, batch_id)")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = new java.io.File(wh, stage)
-    loc.mkdirs()
-    new java.io.File(loc, "_SUCCESS").createNewFile()
-    val actions = Warehouse.recoverMaintenance(spark, dir)
-    assert(actions.exists(_.startsWith("rolled-forward-empty")),
-      s"expected an empty roll-forward, got $actions")
-    val tomb = Warehouse.tbl(dir, "graft_tombstones")
-    assert(spark.catalog.tableExists(tomb) && spark.table(tomb).isEmpty)
-    assert(!spark.catalog.tableExists(stage))
-    // the deletion layer is fully functional on the recovered table
-    Warehouse.deleteDocIds(spark, dir, Seq(7L))
-    assert(spark.table(tomb).count() == 1L)
   }
 
   /** Simulate catalog amnesia (a new JVM's in-memory catalog): copy

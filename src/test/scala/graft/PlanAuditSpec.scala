@@ -82,21 +82,20 @@ class PlanAuditSpec extends SparkSpec {
         assert(planOf(q).contains("shingle_windows"),
           s"$q lost ShingleWindows")
       }
-    // c4 picks its arm at call time (positional fast path vs
-    // exhaustive fallback), so audit BOTH builders directly instead of
-    // the registered query. The exhaustive arm must keep the
-    // ShingleWindows kernel visible; the positional arm checkpoints
-    // its ranked postings (LogicalRDD boundary — kernel use is the
-    // same shared ngramJaccardIndex, covered by the exhaustive row,
-    // the c2-signature precedent), and must stay cartesian/BNLJ-free:
-    // its self-join is equi on the shingle key with residual bounds,
-    // its semi-filter an equi broadcast hash join.
+    // c4 picks its arm at call time (banded fast path vs exhaustive
+    // fallback), so audit BOTH builders directly instead of the
+    // registered query. The exhaustive arm must keep the
+    // ShingleWindows kernel visible; the banded arm checkpoints its
+    // shingle-hash sets (LogicalRDD boundary — kernel use is the same
+    // shared ngramJaccardIndex, covered by the exhaustive row, the
+    // c2-signature precedent), and must stay cartesian/BNLJ-free: its
+    // verify joins are equi on the pair ids.
     assert(operators.DedupOps.ngramJaccardExhaustive(spark, sf)
       .queryExecution.optimizedPlan.toString.contains("shingle_windows"),
       "c4/exhaustive lost ShingleWindows")
     Seq(
       "c4/exhaustive" -> operators.DedupOps.ngramJaccardExhaustive(spark, sf),
-      "c4/positional" -> operators.DedupOps.ngramJaccardPrefix(spark, sf))
+      "c4/banded" -> operators.DedupOps.ngramJaccardBanded(spark, sf))
       .foreach { case (tag, df) =>
         val phys = df.queryExecution
           .explainString(ExplainMode.fromString("formatted"))

@@ -223,9 +223,8 @@ class RecallAtScaleSpec extends SparkSpec {
       .agg(max("doc_id")).head.getLong(0)
     val truth = plantedTextPairs.toSeq.sortBy(_._1).zipWithIndex
       .map { case ((b, _), i) => (b, maxId + 500 + i) }.toSet
-    def rec(cap: Int, bands: Int = 0, bits: Int = 0) = recallOf(
-      DedupOps.dedupSimhash(spark, s"$work/text", bucketCap = cap, limit = all,
-          bands = bands, bits = bits)
+    def rec(cap: Int) = recallOf(
+      DedupOps.dedupSimhash(spark, s"$work/text", bucketCap = cap, limit = all)
         .collect()
         .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet,
       truth)
@@ -235,17 +234,11 @@ class RecallAtScaleSpec extends SparkSpec {
     // C(6,3) block-combination banding (20 bands, ≤33-bit keys),
     // whose occupancy stays ~0 under the default cap at ANY corpus
     // size — recall at the default config is FLOORED, not just
-    // reported. Both retired contiguous layouts stay as
-    // explicit-argument foils: 8×8's 256-key bands cap-collapse
-    // right here; 4×16 holds here but collapses again at ~4M docs —
-    // each measured for exactly the reason it was retired.
+    // reported.
     val recDefault = rec(64)
     val recSized = rec(256)
-    val recFoil416 = rec(64, bands = 4, bits = 16)
-    val recFoil88 = rec(64, bands = 8, bits = 8)
     info(f"c3 doubled-text recall at $sfDir: default(C(6,3),cap64) $recDefault%.2f, " +
-      f"cap256 $recSized%.2f, foil(4x16,cap64) $recFoil416%.2f, " +
-      f"foil(8x8,cap64) $recFoil88%.2f")
+      f"cap256 $recSized%.2f")
     assert(recDefault >= 0.9,
       s"c3 recall $recDefault below pigeonhole floor at the DEFAULT config")
     assert(recSized >= recDefault, "raising the cap must not lose pairs")
@@ -342,9 +335,8 @@ class RecallAtScaleSpec extends SparkSpec {
   }
 
   test("c3 on a Zipf vocabulary: hamming-0 twins vs byte-band concentration, measured") {
-    def rec(cap: Int, bands: Int = 0, bits: Int = 0) = recallOf(
-      DedupOps.dedupSimhash(spark, zipfDir, bucketCap = cap, limit = all,
-          bands = bands, bits = bits)
+    def rec(cap: Int) = recallOf(
+      DedupOps.dedupSimhash(spark, zipfDir, bucketCap = cap, limit = all)
         .collect()
         .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet,
       zipfTruth(500))
@@ -355,13 +347,10 @@ class RecallAtScaleSpec extends SparkSpec {
     // bit-concentration pushed past the cap). ≤33-bit combination
     // keys leave bucket occupancy ~0 at any corpus size, so the
     // pigeonhole guarantee is live with no corpus-size-dependent cap
-    // tuning. Both retired contiguous layouts are kept measured so
-    // the collapses they were retired for stay visible.
+    // tuning. (The retired contiguous layouts' collapse is recorded
+    // in BENCH_dev_r16_zipf*.)
     val recDefault = rec(64)
-    val recFoil416 = rec(64, bands = 4, bits = 16)
-    val recFoil88 = rec(64, bands = 8, bits = 8)
-    info(f"c3 zipf recall: default(C(6,3),cap64) $recDefault%.2f, " +
-      f"foil(4x16,cap64) $recFoil416%.2f, foil(8x8,cap64) $recFoil88%.2f")
+    info(f"c3 zipf recall: default(C(6,3),cap64) $recDefault%.2f")
     assert(recDefault >= 0.999,
       s"c3 zipf planted-twin recall $recDefault below 1.0 at the DEFAULT config")
   }

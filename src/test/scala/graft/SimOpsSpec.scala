@@ -224,8 +224,8 @@ class SimOpsSpec extends SparkSpec {
     // ADC ranks the same probed lists d5 scores exactly; the rerank
     // margin must keep most of d5's recall (d5 measured 0.78 here)
     assert(r10 > 0.5, s"IVF-PQ recall $r10 collapsed vs the IVF stage")
-    // a wider rerank margin than the default (16 since the PqGrid
-    // re-run — this must stay STRICTLY above it or the check is
+    // a wider rerank margin than the default (16 since the rerank
+    // grid re-run, BASELINE.md "Recall" — this must stay STRICTLY above it or the check is
     // vacuous, the round-6 ADVICE trap) can only help: more ADC
     // candidates get the exact pass
     val r32 = recallOf(SimOps.annIvfPq(spark, sf, rerank = 32).collect()
