@@ -259,7 +259,7 @@ object RetrievalOps {
   /** Corpus stats reconstructed from the landed per-batch stats rows,
     * minus the scope's deletion deltas at the CURRENT index identity
     * (deleteDocs lands one (n_docs, sum_dl) delta row per delete
-    * batch, tagged (build_key, gen) — superseded generations already
+    * batch, tagged (build key, gen) — superseded generations already
     * folded or excluded what they corrected, so their deltas are
     * inert): n = Σ n_docs − Σ Δn, avgdl = (Σ sum_dl − Σ Δdl)/n (exact
     * — see postingPartsFrom). Bounded: one row per landed batch plus
@@ -275,7 +275,10 @@ object RetrievalOps {
               col("sum_dl").cast("long").as("sum_dl"))
     val all = Warehouse.tombStats(spark, dir) match {
       case Some(t) =>
-        val (bkey, gen) = Warehouse.postingsIdentity(spark, dir)
+        val (bkey, gen) =
+          Warehouse.postingsIdentity(Warehouse.readManifest(spark, dir))
+            .getOrElse(throw new IllegalStateException(
+              "no finished posting build — run Warehouse.ensurePostings"))
         base.union(
           t.filter(col("scope") === tombScope && col("bkey") === bkey &&
                    col("gen") === gen)

@@ -131,10 +131,6 @@ object Warehouse {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  /** One-time landing job: write orders + lineitem bucketed by the
-    * join key into the session catalog (managed tables under
-    * spark.sql.warehouse.dir). Idempotent via overwrite.
-    */
   // idempotent across JVMs: drop catalog entries AND any orphaned
   // location a previous session left behind (a managed-table location
   // that exists without a catalog entry fails CREATE TABLE AS SELECT)
@@ -170,14 +166,19 @@ object Warehouse {
   // would close (disclosed; GC runs at maintenance cadence).
 
   /** The resolved current state of a corpus namespace's landed
-    * swap-managed tables: `tabs` maps logical base → physical base
-    * (absent = the plain logical name), `postGen` is the posting
-    * index's generation — its one home, recorded by every build and
-    * compaction (absent = no posting index was ever built).
+    * indexes: `tabs` maps logical base → physical base of the
+    * swap-managed tables (absent = the plain logical name), `postGen`
+    * is the posting index's generation, recorded by every build and
+    * compaction (absent = no posting index was ever built), and `keys`
+    * maps each landed index (post, ivf, bloom, minhash, phash, audio,
+    * nb) to the build key it was built from — the one record every
+    * ensure* gate compares against (absent = no build of it finished;
+    * see [[landIndex]]).
     */
   private[graft] case class Manifest(version: Long,
                                      tabs: Map[String, String],
-                                     postGen: Option[Long])
+                                     postGen: Option[Long],
+                                     keys: Map[String, String] = Map.empty)
 
   private def manifestDir(spark: SparkSession, dir: String): Path =
     new Path(warehousePath(spark), s"_graft_manifest_${ns(dir)}")
@@ -189,11 +190,10 @@ object Warehouse {
     val kv = lines.map { l =>
       val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
     }.toMap
-    Manifest(v,
-      kv.collect { case (k, pv) if k.startsWith("tab.") =>
-        (k.stripPrefix("tab."), pv)
-      },
-      kv.get("post_gen").map(_.toLong))
+    def prefixed(p: String): Map[String, String] =
+      kv.collect { case (k, pv) if k.startsWith(p) => (k.stripPrefix(p), pv) }
+    Manifest(v, prefixed("tab."), kv.get("post_gen").map(_.toLong),
+      prefixed("key."))
   }
 
   /** All surviving manifest versions, parsed, ascending — the
@@ -287,7 +287,9 @@ object Warehouse {
     val fs = fsOf(spark, d)
     fs.mkdirs(d)
     val content = (m.tabs.toSeq.sorted.map { case (k, v) => s"tab.$k=$v" } ++
-      m.postGen.map(g => s"post_gen=$g").toSeq).mkString("\n") + "\n"
+      m.postGen.map(g => s"post_gen=$g").toSeq ++
+      m.keys.toSeq.sorted.map { case (k, v) => s"key.$k=$v" })
+      .mkString("\n") + "\n"
     val target = new Path(d, f"v${m.version}%010d")
     val won =
       if ("file" == fs.getUri.getScheme) {
@@ -345,7 +347,7 @@ object Warehouse {
     * stale). Write-side cost: one tiny file per mutation batch —
     * curation cadence, never probe cost.
     */
-  private def bumpManifest(spark: SparkSession, dir: String,
+  private[graft] def bumpManifest(spark: SparkSession, dir: String,
                            mutate: Manifest => Manifest = identity)
       : Manifest = {
     var committed: Option[Manifest] = None
@@ -422,32 +424,57 @@ object Warehouse {
   private def physBase(m: Manifest, logical: String): String =
     m.tabs.getOrElse(logical, logical)
 
-  /** Rebuild preamble for stores whose current generation may live
-    * under a versioned physical name: drop that superseded physical
-    * and point the manifest back at the plain logical names the build
-    * is about to write (plus the new posting generation when given).
+  /** Land one index in the commit order every build* follows:
+    *  1. ONE manifest bump removes `index`'s build key — and points
+    *     any of `tables` a compaction re-addressed back at the plain
+    *     names the build writes, and moves the posting generation to
+    *     `postGen` when given;
+    *  2. the data tables (and any versioned physical the bump
+    *     retired) are dropped and `write` lands the new ones;
+    *  3. ONE bump records `key`.
+    * Manifest first, THEN drop (round-16 advice fix): a crash after
+    * step 1 leaves no key, so the next gate rebuilds instead of
+    * serving a half-written index, and a retired versioned physical
+    * becomes an orphan the superseded-generation GC collects.
     */
-  private def resetSwapTabs(spark: SparkSession, dir: String,
-                            logicals: Seq[String],
-                            postGen: Option[Long] = None): Unit = {
+  private def landIndex(spark: SparkSession, dir: String, index: String,
+                        key: String, tables: Seq[String],
+                        postGen: Option[Long] = None)(write: => Unit): Unit = {
     val m = readManifest(spark, dir)
-    // manifest first, THEN drop (round-16 advice fix): dropping the
-    // superseded versioned physical before the bump left a crash
-    // window where the manifest named a dropped table and every probe
-    // failed until the rebuild was re-run; committing the bump first
-    // means a crash leaves only an orphaned versioned table the
-    // superseded-generation GC collects
-    if (logicals.exists(m.tabs.contains) || postGen.isDefined) {
-      bumpManifest(spark, dir, cur => cur.copy(
-        tabs = cur.tabs -- logicals,
-        postGen = postGen.orElse(cur.postGen)))
-      ()
-    }
-    logicals.foreach { l =>
-      val p = physBase(m, l)
-      if (p != l) dropManaged(spark, Seq(tbl(dir, p)))
-    }
+    bumpManifest(spark, dir, cur => cur.copy(
+      tabs = cur.tabs -- tables,
+      postGen = postGen.orElse(cur.postGen),
+      keys = cur.keys - index))
+    dropManaged(spark,
+      (tables ++ tables.map(physBase(m, _))).distinct.map(tbl(dir, _)))
+    write
+    bumpManifest(spark, dir, cur => cur.copy(keys = cur.keys + (index -> key)))
+    ()
   }
+
+  /** The one freshness gate of every landed index: fresh iff `m`
+    * holds `key` as `index`'s build key and every data table (by
+    * logical name) is catalog-visible, adopting surviving files
+    * first. Filesystem and catalog reads only — a warm gate runs no
+    * Spark job. Every key folds in the corpus fingerprint (and, for
+    * NB/bloom, the tombstone-state fingerprint), so a rewritten
+    * corpus at the same path rebuilds (round-14 data-version
+    * contract).
+    */
+  private def landedFresh(spark: SparkSession, dir: String, m: Manifest,
+                          index: String, key: String,
+                          logicals: String*): Boolean =
+    m.keys.get(index).contains(key) &&
+      logicals.forall(adoptCurrent(spark, dir, m, _))
+
+  /** Write an unpartitioned landed table. */
+  private def saveTable(df: DataFrame, dir: String, base: String): Unit =
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .saveAsTable(tbl(dir, base))
+
+  /** One `|name=value` field of a build key. */
+  private def keyField(key: String, name: String): Option[String] =
+    s"\\|$name=([^|]*)".r.findFirstMatchIn(key).map(_.group(1))
 
   /** Public resolver: the full physical table name currently serving
     * `logical` for this corpus dir — what specs, tools and external
@@ -457,6 +484,10 @@ object Warehouse {
   def currentTable(spark: SparkSession, dir: String, logical: String): String =
     tbl(dir, physBase(readManifest(spark, dir), logical))
 
+  /** One-time landing job: write orders + lineitem bucketed by the
+    * join key into the session catalog (managed tables under
+    * spark.sql.warehouse.dir). Idempotent via overwrite.
+    */
   def build(spark: SparkSession, dir: String): Unit = {
     dropManaged(spark, Seq(tbl(dir, "graft_orders_b"), tbl(dir, "graft_lineitem_b")))
     Tables.orders(spark, dir)
@@ -529,24 +560,14 @@ object Warehouse {
     graft.operators.SimOps.annFilteredFrom(emb, meta, k, qmod)
   }
 
-  /** One-time IVF-PQ index landing: every vector routed to its
-    * `nAssign` nearest cells and PQ-encoded, posting lists written
-    * PARTITIONED BY cent_id — the physical layout where probing a cell
-    * is DIRECTORY PRUNING, not a filter. d10 recomputes assignment and
-    * codes per run (the honest one-shot form); a production index is
-    * built once and re-read per query batch, and THIS is that table.
-    * Rows: (vec_id, sub_j, ce, cn) under cent_id=... partitions — a
-    * vector in two cells has its codes duplicated in both, exactly
-    * like a real IVF posting list.
-    */
   /** Resolve a coarse-quantizer sizing rule against the corpus'
     * vector count: "fixed:<k>" pins nlist = k (the registered/oracled
     * configs); "sqrt:<base>@<n0>" grows nlist = max(base,
     * round(base·√(n/n0))) — the measured sustainable curve (c9/c11/
     * d16b scaled arms: nlist ∝ √N keeps both routing and per-cell work
-    * O(N^1.5)). Persisting the RULE with the index (graft_ivf_meta)
-    * means a deployment's rebuild at 10× the data sizes itself — no
-    * hand-carried constant.
+    * O(N^1.5)). Persisting the RULE with the index (the `rule=` field
+    * of its manifest build key) means a deployment's rebuild at 10×
+    * the data sizes itself — no hand-carried constant.
     */
   def resolveNlist(rule: String, n: Long): Int = rule.split("[:@]") match {
     case Array("fixed", k) => k.toInt
@@ -556,19 +577,13 @@ object Warehouse {
     case _ => throw new IllegalArgumentException(s"bad nlist rule: $rule")
   }
 
-  /** The landed index's sizing rule (graft_ivf_meta.nlist_rule). Read
-    * by NAME, not position: a pre-round-13 meta table surviving in a
-    * shared warehouse has only build_key, and a positional read there
-    * threw an uncontextualized ArrayIndexOutOfBounds (round-13 advice
-    * fix) — fail with the actionable message instead.
+  /** The landed IVF index's sizing rule: the `rule=` field of its
+    * manifest build key.
     */
-  def landedNlistRule(spark: SparkSession, dir: String): String = {
-    val meta = spark.table(tbl(dir, "graft_ivf_meta"))
-    require(meta.columns.contains("nlist_rule"),
-      "legacy graft_ivf_meta schema (no nlist_rule column) — rebuild " +
-        "the landed IVF index (Warehouse.buildIvf) to refresh it")
-    meta.select(col("nlist_rule")).collect()(0).getString(0)
-  }
+  def landedNlistRule(spark: SparkSession, dir: String): String =
+    readManifest(spark, dir).keys.get("ivf").flatMap(keyField(_, "rule"))
+      .getOrElse(throw new IllegalStateException(
+        "no landed IVF index — build it first (Warehouse.buildIvf)"))
 
   /** Ruled-ensure vector counts memoized per (dir, excludeMod): a
     * ruled ensureIvf must resolve its rule against the build slice's
@@ -594,88 +609,90 @@ object Warehouse {
     }
   }
 
-  /** `nlistRule`: "fixed" keeps the passed `nlist` (every registered/
+  /** One-time IVF-PQ index landing: every vector routed to its
+    * `nAssign` nearest cells and PQ-encoded, posting lists written
+    * PARTITIONED BY cent_id — the physical layout where probing a cell
+    * is DIRECTORY PRUNING, not a filter. d10 recomputes assignment and
+    * codes per run (the honest one-shot form); a production index is
+    * built once and re-read per query batch, and THIS is that table.
+    * Rows: (vec_id, cevec, cn2) under (batch_id, cent_id) partitions —
+    * a vector in two cells has its codes duplicated in both, exactly
+    * like a real IVF posting list. Build parameters ride with the
+    * index as its manifest build key (a real index ships its build
+    * params): ensureIvf compares against it instead of trusting
+    * in-process memos, so a rebuild at different params (specs,
+    * grids) is never mistaken for the standing index.
+    *
+    * `nlistRule`: "fixed" keeps the passed `nlist` (every registered/
     * oracled path); any other value is a [[resolveNlist]] rule string
     * resolved against the build slice's vector count, overriding
-    * `nlist`. The applied rule rides in graft_ivf_meta next to the
-    * build key, so freshness gating distinguishes a ruled build from a
-    * fixed one even at the same resolved nlist.
+    * `nlist`. The applied rule is part of the build key, so freshness
+    * gating distinguishes a ruled build from a fixed one even at the
+    * same resolved nlist.
     */
   def buildIvf(spark: SparkSession, dir: String, nlist: Int = 64,
                nAssign: Int = 4, ks: Int = 256, m: Int = 8,
                subDim: Int = 8, kmeansIters: Int = 4,
                excludeMod: Int = 0, nlistRule: String = "fixed"): Unit = {
     import graft.operators.SimOps
-    dropManaged(spark, Seq(tbl(dir, "graft_ivf_lists"), tbl(dir, "graft_ivf_cents"),
-                           tbl(dir, "graft_ivf_book"), tbl(dir, "graft_ivf_meta")))
-    resetSwapTabs(spark, dir, Seq("graft_ivf_lists"))
     // excludeMod > 0 builds the STANDING index of the incremental
     // story: vectors with vec_id % excludeMod == 0 are the
     // yet-to-arrive batch and take the upsertIvf path later.
     val embAll = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
               graft.functions.VectorFns.norm(col("embedding")).as("nrm"))
-    val emb0 = if (excludeMod <= 0) embAll
+    val emb = if (excludeMod <= 0) embAll
       else embAll.filter(pmod(col("vec_id"), lit(excludeMod)) =!= 0)
-    val (resolvedNlist, ruleTag) =
+    val (nlistR, ruleTag) =
       if (nlistRule == "fixed") (nlist, s"fixed:$nlist")
-      else (resolveNlist(nlistRule, emb0.count()), nlistRule)
-    val nlistR = resolvedNlist
-    val emb = emb0
-    // The build-once path defaults to Lloyd-REFINED coarse centroids
-    // (kmeansIters=4): the refinement is a build-time cost amortized
-    // across every probe, and the measured sweeps (BASELINE.md
-    // "Recall", sf0.1) buy recall 0.79 → 0.875 at identical probe
-    // cost (km=8 adds only +0.0025 more — past the knee). The centroid set is
-    // PERSISTED with the index — a real IVF index ships its centroids;
-    // probes read the ≤nlist-row table instead of re-deriving routing.
-    val cents = SimOps.ivfCentroids(emb, nlistR, kmeansIters)
-    cents.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_ivf_cents"))
-    val landedCents = spark.table(tbl(dir, "graft_ivf_cents"))
-    val lists = SimOps.nearestCells(landedCents)(
-        emb, "vec_id", "embedding", "nrm", nAssign)
-      .select(col("vec_id"), col("cent_id"))
-    // The PQ codebook is PERSISTED too: an upserted batch must encode
-    // against the book the standing codes used, or its ADC distances
-    // are incomparable with theirs.
-    val book = SimOps.pqTrainCodebook(
-      SimOps.pqSubs(emb.select(col("vec_id"), col("embedding")),
-                    Seq("vec_id"), m, subDim), ks, m, kmeansIters)
-    writeBook(spark, dir, book)
-    // ONE wide posting row per (vector, cell) membership — cevec is
-    // the sub_j-ordered PQ reconstruction, cn2 its norm² (see
-    // SimOps.pqCodesWide): the probe's ADC reads 1/m the rows and
-    // scores each in one fused dot, with no per-sub_j reassembly
-    // aggregate (round 17 — that exchange measured as the dominant
-    // cost of every landed IVF-PQ probe).
-    val codes = SimOps.pqCodesWide(SimOps.pqEncodeWith(
+      else (resolveNlist(nlistRule, emb.count()), nlistRule)
+    landIndex(spark, dir, "ivf",
+      ivfBuildKey(dir, nlistR, nAssign, ks, m, subDim, kmeansIters,
+                  excludeMod, ruleTag),
+      Seq("graft_ivf_lists", "graft_ivf_cents", "graft_ivf_book")) {
+      // The build-once path defaults to Lloyd-REFINED coarse centroids
+      // (kmeansIters=4): the refinement is a build-time cost amortized
+      // across every probe, and the measured sweeps (BASELINE.md
+      // "Recall", sf0.1) buy recall 0.79 → 0.875 at identical probe
+      // cost (km=8 adds only +0.0025 more — past the knee). The centroid set is
+      // PERSISTED with the index — a real IVF index ships its centroids;
+      // probes read the ≤nlist-row table instead of re-deriving routing.
+      saveTable(SimOps.ivfCentroids(emb, nlistR, kmeansIters), dir,
+                "graft_ivf_cents")
+      val landedCents = spark.table(tbl(dir, "graft_ivf_cents"))
+      val lists = SimOps.nearestCells(landedCents)(
+          emb, "vec_id", "embedding", "nrm", nAssign)
+        .select(col("vec_id"), col("cent_id"))
+      // The PQ codebook is PERSISTED too: an upserted batch must encode
+      // against the book the standing codes used, or its ADC distances
+      // are incomparable with theirs.
+      val book = SimOps.pqTrainCodebook(
         SimOps.pqSubs(emb.select(col("vec_id"), col("embedding")),
-                      Seq("vec_id"), m, subDim), book), m)
-      .select(col("vec_id"), col("cevec"), col("cn2"))
-    // batch_id is the idempotency key (base build = -1): each upsert
-    // lands under its own batch_id partitions, so a replayed
-    // micro-batch DYNAMIC-overwrites exactly its own files and never
-    // double-appends (see upsertIvfFrom). cent_id stays a partition
-    // column, so probe-side dynamic partition pruning is unchanged.
-    lists.join(codes, "vec_id")
-      .select(col("vec_id"), col("cevec"), col("cn2"),
-              lit(-1L).as("batch_id"), col("cent_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch_id", "cent_id")
-      .format("parquet")
-      .saveAsTable(tbl(dir, "graft_ivf_lists"))
-    // Build metadata rides with the index (a real index ships its
-    // build params): freshness gates like ensureIvf compare against
-    // this instead of trusting in-process memos, so a rebuild at
-    // different params (specs, grids) can never be mistaken for the
-    // standing index.
-    import spark.implicits._
-    Seq((ivfBuildKey(dir, nlistR, nAssign, ks, m, subDim, kmeansIters,
-                     excludeMod, ruleTag), ruleTag))
-      .toDF("build_key", "nlist_rule")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_ivf_meta"))
+                      Seq("vec_id"), m, subDim), ks, m, kmeansIters)
+      writeBook(spark, dir, book)
+      // ONE wide posting row per (vector, cell) membership — cevec is
+      // the sub_j-ordered PQ reconstruction, cn2 its norm² (see
+      // SimOps.pqCodesWide): the probe's ADC reads 1/m the rows and
+      // scores each in one fused dot, with no per-sub_j reassembly
+      // aggregate (round 17 — that exchange measured as the dominant
+      // cost of every landed IVF-PQ probe).
+      val codes = SimOps.pqCodesWide(SimOps.pqEncodeWith(
+          SimOps.pqSubs(emb.select(col("vec_id"), col("embedding")),
+                        Seq("vec_id"), m, subDim), book), m)
+        .select(col("vec_id"), col("cevec"), col("cn2"))
+      // batch_id is the idempotency key (base build = -1): each upsert
+      // lands under its own batch_id partitions, so a replayed
+      // micro-batch DYNAMIC-overwrites exactly its own files and never
+      // double-appends (see upsertIvfFrom). cent_id stays a partition
+      // column, so probe-side dynamic partition pruning is unchanged.
+      lists.join(codes, "vec_id")
+        .select(col("vec_id"), col("cevec"), col("cn2"),
+                lit(-1L).as("batch_id"), col("cent_id"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("batch_id", "cent_id")
+        .format("parquet")
+        .saveAsTable(tbl(dir, "graft_ivf_lists"))
+    }
   }
 
   private def ivfBuildKey(dir: String, nlist: Int, nAssign: Int, ks: Int,
@@ -685,8 +702,8 @@ object Warehouse {
       s"km=$kmeansIters|excl=$excludeMod|rule=$ruleTag|rows=wide|" +
       s"fp=${corpusFingerprint(dir, "embeddings")}"
 
-  /** Build the IVF-PQ index only if the landed one (per its own
-    * metadata table) doesn't already match these parameters — the
+  /** Build the IVF-PQ index only if the landed one (per its manifest
+    * build key) doesn't already match these parameters — the
     * query-side freshness gate: first touch in a JVM pays the build,
     * every subsequent probe is probe-cost only, exactly the
     * amortization a production index exists for. A ruled ensure
@@ -699,28 +716,22 @@ object Warehouse {
                 subDim: Int = 8, kmeansIters: Int = 4,
                 excludeMod: Int = 0, nlistRule: String = "fixed"): Unit = {
     recoverMaintenance(spark, dir)
-    val ivfListsPhys = physBase(readManifest(spark, dir), "graft_ivf_lists")
-    adoptLanded(spark, dir, "graft_ivf_meta")
-    adoptLanded(spark, dir, "graft_ivf_cents")
-    adoptLanded(spark, dir, "graft_ivf_book")
-    adoptLanded(spark, dir, ivfListsPhys, Seq("batch_id", "cent_id"))
+    val mf = readManifest(spark, dir)
     val (resolved, ruleTag) =
       if (nlistRule == "fixed") (nlist, s"fixed:$nlist")
       else (resolveNlist(nlistRule, ruledCount(spark, dir, excludeMod)),
             nlistRule)
     val key = ivfBuildKey(dir, resolved, nAssign, ks, m, subDim,
                           kmeansIters, excludeMod, ruleTag)
-    val fresh = spark.catalog.tableExists(tbl(dir, "graft_ivf_meta")) &&
-      spark.catalog.tableExists(tbl(dir, ivfListsPhys)) && {
-        val r = spark.table(tbl(dir, "graft_ivf_meta")).collect()
-        r.length == 1 && r(0).getString(0) == key
-      } &&
+    val fresh = landedFresh(spark, dir, mf, "ivf", key, "graft_ivf_cents",
+                            "graft_ivf_book", "graft_ivf_lists") &&
       // an excl=0 build admits NO legitimate upserts: extra batch_id
       // partitions on top of a full build double-count the overlapping
       // vectors' postings (round-13 advice) — detect and rebuild
       // instead of serving the corrupted index as fresh forever
       (excludeMod != 0 ||
-        landedBatchIds(spark, tbl(dir, ivfListsPhys)) == Set(-1L))
+        landedBatchIds(spark, tbl(dir, physBase(mf, "graft_ivf_lists"))) ==
+          Set(-1L))
     if (!fresh)
       buildIvf(spark, dir, nlist, nAssign, ks, m, subDim, kmeansIters,
                excludeMod, nlistRule)
@@ -736,20 +747,18 @@ object Warehouse {
       .toSet
 
   /** Parse the excludeMod a landed index was built with out of its
-    * metadata key — the coverage guard for the dir-based upsert forms:
-    * an upsert of the `id % batchMod == 0` slice is overlap-free iff
-    * the standing build excluded a slice covering it
+    * manifest build key — the coverage guard for the dir-based upsert
+    * forms: an upsert of the `id % batchMod == 0` slice is overlap-free
+    * iff the standing build excluded a slice covering it
     * (`batchMod % excl == 0`); anything else would double-count the
     * overlapping ids' postings (round-13 advice fix).
     */
-  private def requireUpsertCoverage(spark: SparkSession, metaTable: String,
-                                    batchMod: Int): Unit = {
-    require(spark.catalog.tableExists(metaTable),
-      s"no landed index metadata ($metaTable) — build the index first")
-    val key = spark.table(metaTable).select(col("build_key"))
-      .collect()(0).getString(0)
-    val excl = "\\|excl=(\\d+)".r.findFirstMatchIn(key)
-      .map(_.group(1).toInt).getOrElse(0)
+  private def requireUpsertCoverage(spark: SparkSession, dir: String,
+                                    index: String, batchMod: Int): Unit = {
+    val key = readManifest(spark, dir).keys.get(index)
+    require(key.isDefined,
+      s"no landed $index index build key — build the index first")
+    val excl = key.flatMap(keyField(_, "excl")).fold(0)(_.toInt)
     require(excl > 0 && batchMod % excl == 0,
       s"standing index was built with excludeMod=$excl, which does not " +
         s"cover the arriving id % $batchMod == 0 slice — upserting would " +
@@ -814,15 +823,15 @@ object Warehouse {
     * routing is the md5-rank sample the DuckDB oracle replays — the
     * oracle is DERIVED from d14's fixed-|Q| replay composed with d16's
     * vote SQL (one source of truth for the whole IVF-PQ pipeline).
-    */
-  /** `kmeansIters`: the registered/oracled form builds at 0 (md5-rank
+    *
+    * `kmeansIters`: the registered/oracled form builds at 0 (md5-rank
     * sample routing — the d12/d15 convention that keeps the DuckDB
     * replay exact); a production deployment builds refined centroids
     * once (the ensureIvf default km=4 — recall 0.79 → 0.875 at equal
     * probe cost per BASELINE.md "Recall") and RecallAtScaleSpec floors
     * BOTH arms' label agreement against the exact d16.
-    */
-  /** `nlist` (default 64 — the registered/oracled config): at a fixed
+    *
+    * `nlist` (default 64 — the registered/oracled config): at a fixed
     * nlist the probe's pruning factor is nProbe·nAssign/nlist, so the
     * ×1000 slice reads HALF the posting rows per query and ADC's
     * m 8-dots equal one 64-dot — measured ~even with d16's codegen'd
@@ -863,7 +872,7 @@ object Warehouse {
   def upsertIvf(spark: SparkSession, dir: String, batchMod: Int,
                 nAssign: Int = 4, m: Int = 8, subDim: Int = 8,
                 batchKey: Long = 0L): Unit = {
-    requireUpsertCoverage(spark, tbl(dir, "graft_ivf_meta"), batchMod)
+    requireUpsertCoverage(spark, dir, "ivf", batchMod)
     upsertIvfFrom(Tables.embeddings(spark, dir)
       .filter(pmod(col("vec_id"), lit(batchMod)) === 0)
       .select(col("vec_id"), col("embedding")), dir, nAssign, m, subDim,
@@ -927,11 +936,9 @@ object Warehouse {
   private def writeBook(spark: SparkSession, dir: String,
                         book: graft.functions.PqCodebook): Unit = {
     import spark.implicits._
-    book.entries.zipWithIndex.flatMap { case (cs, j) =>
+    saveTable(book.entries.zipWithIndex.flatMap { case (cs, j) =>
       cs.map(c => (j, c.centId, c.ce.toSeq, c.cn))
-    }.toSeq.toDF("sub_j", "cent_id", "ce", "cn")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_ivf_book"))
+    }.toSeq.toDF("sub_j", "cent_id", "ce", "cn"), dir, "graft_ivf_book")
   }
 
   private def readBook(spark: SparkSession, dir: String): graft.functions.PqCodebook = {
@@ -994,61 +1001,36 @@ object Warehouse {
   def stateFoldBucketed(spark: SparkSession, dir: String): DataFrame =
     graft.operators.EventOps.stateFoldFrom(eventsB(spark, dir))
 
-  /** One-time MinHash index landing for p11's incremental dedup: the
-    * standing corpus' bucket-capped LSH band keys + signatures. An
-    * arriving batch probes these tables via a broadcast of ITS side —
-    * no standing row ever re-shards (WarehouseSpec asserts no exchange
-    * sits above either index scan in the probe plan). At 100 TB the
-    * bands table is the crawler's persistent dedup state, appended as
-    * batches are accepted; the cap is a build-time posting-list limit.
+  /** [[landIndex]] for the unpartitioned two-table indexes (bloom and
+    * the minhash/phash/audio band family): `parts` yields the frames
+    * landed under `names`.
     */
+  private def landPair(spark: SparkSession, dir: String, index: String,
+                       key: String, names: (String, String))
+                      (parts: => (DataFrame, DataFrame)): Unit =
+    landIndex(spark, dir, index, key, Seq(names._1, names._2)) {
+      val (a, b) = parts
+      saveTable(a, dir, names._1)
+      saveTable(b, dir, names._2)
+    }
+
   /** Land c12's standing index: the per-shard bloom table (nShards
     * rows) and the fingerprint→min-doc store. Rebuilt per dir; the
     * probe (DedupOps.bloomDedupIndexed) then never reads the history
     * corpus at all.
     */
-  /** Generic freshness gate for the band/sketch index family (bloom,
-    * minhash, phash, audio): fresh iff the meta table exists, every
-    * data table exists, and the landed build key matches — the
-    * ensureIvf/ensurePostings convention factored once. The key always
-    * folds in the corpus fingerprint, so a rewritten corpus at the
-    * same path rebuilds (round-14 data-version contract).
-    */
-  private def metaFresh(spark: SparkSession, dir: String, metaBase: String,
-                        dataBases: Seq[String], key: String): Boolean =
-    (metaBase +: dataBases).forall(b =>
-      adoptLanded(spark, dir, b)) && {
-      val r = spark.table(tbl(dir, metaBase)).collect()
-      r.length == 1 && r(0).getString(0) == key
-    }
-
-  private def writeMeta(spark: SparkSession, dir: String, metaBase: String,
-                        key: String): Unit = {
-    import spark.implicits._
-    Seq(key).toDF("build_key")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, metaBase))
-  }
-
   def buildBloom(spark: SparkSession, dir: String,
-                 fpp: Double = 0.01, newMod: Int = graft.operators.DedupOps.IncrementalNewMod): Unit = {
+                 fpp: Double = 0.01, newMod: Int = graft.operators.DedupOps.IncrementalNewMod): Unit =
     // shard count pinned to DedupOps.BloomShards: the landed probe
     // routes by pmod(fp, BloomShards), and a bloom table built at any
     // other sharding would silently mis-route probes (an empty shard
     // also can't be told apart from a missing one at read time, so the
     // count can't be derived from the table safely)
-    dropManaged(spark, Seq(tbl(dir, "graft_bloom_shards"), tbl(dir, "graft_bloom_fps"),
-                           tbl(dir, "graft_bloom_meta")))
-    val (shards, fps) = graft.operators.DedupOps
-      .bloomIndexParts(spark, dir, graft.operators.DedupOps.BloomShards,
-                       fpp, newMod)
-    shards.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_bloom_shards"))
-    fps.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_bloom_fps"))
-    writeMeta(spark, dir, "graft_bloom_meta",
-              bloomBuildKey(spark, dir, fpp, newMod))
-  }
+    landPair(spark, dir, "bloom", bloomBuildKey(spark, dir, fpp, newMod),
+             ("graft_bloom_shards", "graft_bloom_fps")) {
+      graft.operators.DedupOps.bloomIndexParts(
+        spark, dir, graft.operators.DedupOps.BloomShards, fpp, newMod)
+    }
 
   private def bloomBuildKey(spark: SparkSession, dir: String, fpp: Double,
                             newMod: Int): String =
@@ -1066,9 +1048,9 @@ object Warehouse {
     */
   def ensureBloom(spark: SparkSession, dir: String, fpp: Double = 0.01,
                   newMod: Int = graft.operators.DedupOps.IncrementalNewMod): Unit =
-    if (!metaFresh(spark, dir, "graft_bloom_meta",
-                   Seq("graft_bloom_shards", "graft_bloom_fps"),
-                   bloomBuildKey(spark, dir, fpp, newMod)))
+    if (!landedFresh(spark, dir, readManifest(spark, dir), "bloom",
+                     bloomBuildKey(spark, dir, fpp, newMod),
+                     "graft_bloom_shards", "graft_bloom_fps"))
       buildBloom(spark, dir, fpp, newMod)
 
   /** See [[buildBloom]]; delegate kept here so the landed arm lives
@@ -1077,30 +1059,6 @@ object Warehouse {
   def bloomDedupIndexed(spark: SparkSession, dir: String,
                         newMod: Int = graft.operators.DedupOps.IncrementalNewMod): DataFrame =
     graft.operators.DedupOps.bloomDedupIndexed(spark, dir, newMod)
-
-  /** Land f7's standing image-catalog index: the bucket-capped band
-    * table and the (doc_id, phash) signature store. The probe
-    * (MultimodalOps.imageNearDupIndexed) then hashes only the arriving
-    * batch — the catalog's images are never re-read. Build and probe
-    * share `newMod` through the same default; probing with a batch
-    * that overlaps the landed catalog is not wrong (a recrawled image
-    * legitimately matches its own cataloged copy) but changes what
-    * "novel" means, so pass matching values when overriding.
-    */
-  def buildPhash(spark: SparkSession, dir: String, bucketCap: Int = 64,
-                 newMod: Int = graft.operators.MultimodalOps.NearDupBatchMod)
-      : Unit = {
-    dropManaged(spark, Seq(tbl(dir, "graft_phash_bands"), tbl(dir, "graft_phash_sigs"),
-                           tbl(dir, "graft_phash_meta")))
-    val (bands, sigs) = graft.operators.MultimodalOps
-      .phashIndexParts(spark, dir, bucketCap, newMod)
-    bands.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_phash_bands"))
-    sigs.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_phash_sigs"))
-    writeMeta(spark, dir, "graft_phash_meta",
-              bandIndexKey(dir, "phash-c63", bucketCap, newMod))
-  }
 
   /** Shared build-key shape for the band-index family (minhash, phash,
     * audio): dir + cap + split modulus + corpus fingerprint. `kind`
@@ -1115,15 +1073,45 @@ object Warehouse {
     s"$dir|kind=$kind|cap=$bucketCap|newMod=$newMod|" +
       s"fp=${corpusFingerprint(dir, "documents")}"
 
+  /** Land band index `index` (graft_<index>_bands + graft_<index>_sigs)
+    * under [[bandIndexKey]]. */
+  private def buildBands(spark: SparkSession, dir: String, index: String,
+                         kind: String, bucketCap: Int, newMod: Int)
+                        (parts: => (DataFrame, DataFrame)): Unit =
+    landPair(spark, dir, index, bandIndexKey(dir, kind, bucketCap, newMod),
+             (s"graft_${index}_bands", s"graft_${index}_sigs"))(parts)
+
+  /** The band family's gate: [[landedFresh]] over the two tables. */
+  private def bandsFresh(spark: SparkSession, dir: String, index: String,
+                         kind: String, bucketCap: Int, newMod: Int): Boolean =
+    landedFresh(spark, dir, readManifest(spark, dir), index,
+                bandIndexKey(dir, kind, bucketCap, newMod),
+                s"graft_${index}_bands", s"graft_${index}_sigs")
+
+  /** Land f7's standing image-catalog index: the bucket-capped band
+    * table and the (doc_id, phash) signature store. The probe
+    * (MultimodalOps.imageNearDupIndexed) then hashes only the arriving
+    * batch — the catalog's images are never re-read. Build and probe
+    * share `newMod` through the same default; probing with a batch
+    * that overlaps the landed catalog is not wrong (a recrawled image
+    * legitimately matches its own cataloged copy) but changes what
+    * "novel" means, so pass matching values when overriding.
+    */
+  def buildPhash(spark: SparkSession, dir: String, bucketCap: Int = 64,
+                 newMod: Int = graft.operators.MultimodalOps.NearDupBatchMod)
+      : Unit =
+    buildBands(spark, dir, "phash", "phash-c63", bucketCap, newMod) {
+      graft.operators.MultimodalOps.phashIndexParts(spark, dir, bucketCap,
+                                                    newMod)
+    }
+
   /** Build f7's image index only if the landed one doesn't match these
     * parameters (the ensureBloom gate on pixels).
     */
   def ensurePhash(spark: SparkSession, dir: String, bucketCap: Int = 64,
                   newMod: Int = graft.operators.MultimodalOps.NearDupBatchMod)
       : Unit =
-    if (!metaFresh(spark, dir, "graft_phash_meta",
-                   Seq("graft_phash_bands", "graft_phash_sigs"),
-                   bandIndexKey(dir, "phash-c63", bucketCap, newMod)))
+    if (!bandsFresh(spark, dir, "phash", "phash-c63", bucketCap, newMod))
       buildPhash(spark, dir, bucketCap, newMod)
 
   /** See [[buildPhash]]; delegate kept next to the other landed probes.
@@ -1148,18 +1136,11 @@ object Warehouse {
     */
   def buildAudio(spark: SparkSession, dir: String, bucketCap: Int = 64,
                  newMod: Int = graft.operators.MultimodalOps.NearDupBatchMod)
-      : Unit = {
-    dropManaged(spark, Seq(tbl(dir, "graft_audio_bands"), tbl(dir, "graft_audio_sigs"),
-                           tbl(dir, "graft_audio_meta")))
-    val (bands, sigs) = graft.operators.MultimodalOps
-      .audioIndexParts(spark, dir, bucketCap, newMod)
-    bands.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_audio_bands"))
-    sigs.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_audio_sigs"))
-    writeMeta(spark, dir, "graft_audio_meta",
-              bandIndexKey(dir, "audio-c63", bucketCap, newMod))
-  }
+      : Unit =
+    buildBands(spark, dir, "audio", "audio-c63", bucketCap, newMod) {
+      graft.operators.MultimodalOps.audioIndexParts(spark, dir, bucketCap,
+                                                    newMod)
+    }
 
   /** Build f8b's audio index only if the landed one doesn't match
     * these parameters (the ensurePhash gate on recordings).
@@ -1167,9 +1148,7 @@ object Warehouse {
   def ensureAudio(spark: SparkSession, dir: String, bucketCap: Int = 64,
                   newMod: Int = graft.operators.MultimodalOps.NearDupBatchMod)
       : Unit =
-    if (!metaFresh(spark, dir, "graft_audio_meta",
-                   Seq("graft_audio_bands", "graft_audio_sigs"),
-                   bandIndexKey(dir, "audio-c63", bucketCap, newMod)))
+    if (!bandsFresh(spark, dir, "audio", "audio-c63", bucketCap, newMod))
       buildAudio(spark, dir, bucketCap, newMod)
 
   /** See [[buildAudio]]; delegate kept next to the other landed probes.
@@ -1184,19 +1163,19 @@ object Warehouse {
     graft.operators.MultimodalOps.audioNearDupIndexed(spark, dir, maxHamming,
                                                       newMod)
 
+  /** One-time MinHash index landing for p11's incremental dedup: the
+    * standing corpus' bucket-capped LSH band keys + signatures. An
+    * arriving batch probes these tables via a broadcast of ITS side —
+    * no standing row ever re-shards (WarehouseSpec asserts no exchange
+    * sits above either index scan in the probe plan). At 100 TB the
+    * bands table is the crawler's persistent dedup state, appended as
+    * batches are accepted; the cap is a build-time posting-list limit.
+    */
   def buildMinhash(spark: SparkSession, dir: String, bucketCap: Int = 64,
-                   newMod: Int = graft.operators.DedupOps.IncrementalNewMod): Unit = {
-    dropManaged(spark, Seq(tbl(dir, "graft_minhash_bands"), tbl(dir, "graft_minhash_sigs"),
-                           tbl(dir, "graft_minhash_meta")))
-    val (bands, sigs) = graft.operators.DedupOps
-      .minhashIndexParts(spark, dir, bucketCap, newMod)
-    bands.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_minhash_bands"))
-    sigs.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_minhash_sigs"))
-    writeMeta(spark, dir, "graft_minhash_meta",
-              bandIndexKey(dir, "minhash-k64", bucketCap, newMod))
-  }
+                   newMod: Int = graft.operators.DedupOps.IncrementalNewMod): Unit =
+    buildBands(spark, dir, "minhash", "minhash-k64", bucketCap, newMod) {
+      graft.operators.DedupOps.minhashIndexParts(spark, dir, bucketCap, newMod)
+    }
 
   /** Build p11's standing MinHash index only if the landed one doesn't
     * match these parameters (the ensureBloom gate on band keys).
@@ -1204,9 +1183,7 @@ object Warehouse {
   def ensureMinhash(spark: SparkSession, dir: String, bucketCap: Int = 64,
                     newMod: Int = graft.operators.DedupOps.IncrementalNewMod)
       : Unit =
-    if (!metaFresh(spark, dir, "graft_minhash_meta",
-                   Seq("graft_minhash_bands", "graft_minhash_sigs"),
-                   bandIndexKey(dir, "minhash-k64", bucketCap, newMod)))
+    if (!bandsFresh(spark, dir, "minhash", "minhash-k64", bucketCap, newMod))
       buildMinhash(spark, dir, bucketCap, newMod)
 
   /** p11 over the landed standing index — see
@@ -1373,8 +1350,8 @@ object Warehouse {
     * probe's broadcast query-term join prunes to the buckets its terms
     * hash into exactly as d12's cent_id probes prune cells — plus the
     * per-batch corpus-stats table (n_docs, sum_dl; base build =
-    * batch_id -1) the probe folds into (N, avgdl), and a metadata
-    * table gating freshness (the ensureIvf convention). At 100 TB this
+    * batch_id -1) the probe folds into (N, avgdl), gated by its
+    * manifest build key (the ensureIvf convention). At 100 TB this
     * is the search-engine posting store: built once, term-pruned per
     * query, appended per crawl batch — the corpus token stream is
     * never re-scanned to serve a query.
@@ -1384,51 +1361,46 @@ object Warehouse {
     import graft.operators.RetrievalOps
     // gen is a monotone physical-generation counter across builds AND
     // compactions: stats deltas (deleteDocs) are tagged with the
-    // (build_key, gen) they correct, and ANY new generation makes
+    // (build key, gen) they correct, and ANY new generation makes
     // superseded deltas inert — a rebuild at the same params must not
     // re-subtract deltas for docs it already excluded below. The
     // manifest is its one home (see postingsIdentity).
     val nextGen = readManifest(spark, dir).postGen.fold(0L)(_ + 1L)
-    dropManaged(spark, Seq(tbl(dir, "graft_post_lists"), tbl(dir, "graft_post_stats"),
-                           tbl(dir, "graft_post_meta")))
     // a rebuild supersedes any compacted generation: GC its versioned
     // physicals and move the generation to this build's in one commit
-    resetSwapTabs(spark, dir, Seq("graft_post_lists", "graft_post_stats"),
-                  postGen = Some(nextGen))
-    // rebuilds physically exclude live-tombstoned docs (the new
-    // generation is born clean — the right-to-be-forgotten contract);
-    // what-if scopes stay logical-only
-    val baseDocs = Tables.documents(spark, dir)
-    val sliced = if (excludeMod <= 0) baseDocs
-      else baseDocs.filter(pmod(col("doc_id"), lit(excludeMod)) =!= 0)
-    val (lists, stats) =
-      RetrievalOps.postingPartsFrom(exceptTombstoned(sliced, dir, "doc_id"))
-    // cluster by (bucket, id-slice): whole-tb tasks keep directories at
-    // O(1) files (never tasks×64 small ones), and FOUR id-slices per
-    // bucket keep the probe's per-bucket parallelism — on a Zipf corpus
-    // a stopword's tb bucket holds ~N/lnV rows, and one-file-per-bucket
-    // serialized that scan into a straggler (round-15 SkewAudit at
-    // ×1000: dominant-stage max/p50 = 5.5× before, see BASELINE; the
-    // compactIvf cell layout decision applied to text)
-    lists
-      .select(col("term"), col("doc_id"), col("dl"), col("tf"),
-              lit(-1L).as("batch_id"), col("tb"))
-      .repartition(col("tb"), pmod(xxhash64(col("doc_id")), lit(4L)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch_id", "tb")
-      .format("parquet")
-      .saveAsTable(tbl(dir, "graft_post_lists"))
-    stats
-      .select(col("n_docs"), col("sum_dl"), lit(-1L).as("batch_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("batch_id")
-      .format("parquet")
-      .saveAsTable(tbl(dir, "graft_post_stats"))
-    import spark.implicits._
-    Seq(postingsBuildKey(dir, excludeMod))
-      .toDF("build_key")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_post_meta"))
+    landIndex(spark, dir, "post", postingsBuildKey(dir, excludeMod),
+              Seq("graft_post_lists", "graft_post_stats"),
+              postGen = Some(nextGen)) {
+      // rebuilds physically exclude live-tombstoned docs (the new
+      // generation is born clean — the right-to-be-forgotten contract);
+      // what-if scopes stay logical-only
+      val baseDocs = Tables.documents(spark, dir)
+      val sliced = if (excludeMod <= 0) baseDocs
+        else baseDocs.filter(pmod(col("doc_id"), lit(excludeMod)) =!= 0)
+      val (lists, stats) =
+        RetrievalOps.postingPartsFrom(exceptTombstoned(sliced, dir, "doc_id"))
+      // cluster by (bucket, id-slice): whole-tb tasks keep directories at
+      // O(1) files (never tasks×64 small ones), and FOUR id-slices per
+      // bucket keep the probe's per-bucket parallelism — on a Zipf corpus
+      // a stopword's tb bucket holds ~N/lnV rows, and one-file-per-bucket
+      // serialized that scan into a straggler (round-15 SkewAudit at
+      // ×1000: dominant-stage max/p50 = 5.5× before, see BASELINE; the
+      // compactIvf cell layout decision applied to text)
+      lists
+        .select(col("term"), col("doc_id"), col("dl"), col("tf"),
+                lit(-1L).as("batch_id"), col("tb"))
+        .repartition(col("tb"), pmod(xxhash64(col("doc_id")), lit(4L)))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("batch_id", "tb")
+        .format("parquet")
+        .saveAsTable(tbl(dir, "graft_post_lists"))
+      stats
+        .select(col("n_docs"), col("sum_dl"), lit(-1L).as("batch_id"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("batch_id")
+        .format("parquet")
+        .saveAsTable(tbl(dir, "graft_post_stats"))
+    }
   }
 
   private def postingsBuildKey(dir: String, excludeMod: Int): String =
@@ -1443,30 +1415,17 @@ object Warehouse {
                      excludeMod: Int = 0): Unit = {
     recoverMaintenance(spark, dir)
     val m0 = readManifest(spark, dir)
-    val listsPhys = physBase(m0, "graft_post_lists")
-    val statsPhys = physBase(m0, "graft_post_stats")
-    adoptLanded(spark, dir, "graft_post_meta")
-    adoptLanded(spark, dir, listsPhys, Seq("batch_id", "tb"))
-    adoptLanded(spark, dir, statsPhys, Seq("batch_id"))
-    val key = postingsBuildKey(dir, excludeMod)
-    val fresh = spark.catalog.tableExists(tbl(dir, "graft_post_meta")) &&
-      spark.catalog.tableExists(tbl(dir, listsPhys)) &&
-      spark.catalog.tableExists(tbl(dir, statsPhys)) &&
-      // every build records its generation in the manifest: a store
-      // without one was never built through it, so rebuild rather
-      // than guess
-      m0.postGen.isDefined && {
-        val r = spark.table(tbl(dir, "graft_post_meta"))
-          .select(col("build_key")).collect()
-        r.length == 1 && r(0).getString(0) == key
-      } &&
+    val fresh = landedFresh(spark, dir, m0, "post",
+                            postingsBuildKey(dir, excludeMod),
+                            "graft_post_lists", "graft_post_stats") &&
       // an excl=0 build admits NO legitimate upserts (round-13 advice):
       // a batch partition on top of a full build double-counts its
       // docs' postings AND stats rows — detect and rebuild instead of
       // reporting the corrupted index fresh forever. The stats table
       // has one row per batch, so this check is O(batches).
       (excludeMod != 0 ||
-        landedBatchIds(spark, tbl(dir, statsPhys)) == Set(-1L))
+        landedBatchIds(spark, tbl(dir, physBase(m0, "graft_post_stats"))) ==
+          Set(-1L))
     if (!fresh) buildPostings(spark, dir, excludeMod)
   }
 
@@ -1485,7 +1444,7 @@ object Warehouse {
     */
   def upsertPostings(spark: SparkSession, dir: String, batchMod: Int,
                      batchKey: Long = 0L): Unit = {
-    requireUpsertCoverage(spark, tbl(dir, "graft_post_meta"), batchMod)
+    requireUpsertCoverage(spark, dir, "post", batchMod)
     upsertPostingsFrom(Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(batchMod)) === 0), dir, batchKey)
   }
@@ -1557,51 +1516,41 @@ object Warehouse {
     * one counts shuffle (TextOps.nbModelFrom); at 100 TB it runs once
     * per curation cycle and every scoring run joins the landed
     * weights instead of re-deriving them (the e17 verdict-item-2
-    * posture fix). Metadata-gated like ensureIvf.
+    * posture fix). Gated by its manifest build key like ensureIvf.
     */
   def buildNbModel(spark: SparkSession, dir: String,
-                   refSource: String = "src0"): Unit = {
-    dropManaged(spark, Seq(tbl(dir, "graft_nb_weights"), tbl(dir, "graft_nb_priors"),
-                           tbl(dir, "graft_nb_meta")))
-    // live-tombstoned docs are excluded from TRAINING (a deleted doc's
-    // counts must leave the model, not just its score row; the build
-    // key carries the tombstone-state fingerprint so ensureNbModel
-    // retrains on the next probe after a live deletion)
-    val (weights, priors) = graft.operators.TextOps
-      .nbModelFrom(exceptTombstoned(Tables.documents(spark, dir),
-                                    dir, "doc_id"), refSource)
-    weights.write.mode(SaveMode.Overwrite)
-      .bucketBy(Buckets, "term").sortBy("term")
-      .format("parquet")
-      .saveAsTable(tbl(dir, "graft_nb_weights"))
-    priors.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_nb_priors"))
-    import spark.implicits._
-    Seq(nbBuildKey(spark, dir, refSource)).toDF("build_key")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(tbl(dir, "graft_nb_meta"))
-  }
+                   refSource: String = "src0"): Unit =
+    landIndex(spark, dir, "nb", nbBuildKey(spark, dir, refSource),
+              Seq("graft_nb_weights", "graft_nb_priors")) {
+      // live-tombstoned docs are excluded from TRAINING (a deleted doc's
+      // counts must leave the model, not just its score row; the build
+      // key carries the tombstone-state fingerprint so ensureNbModel
+      // retrains on the next probe after a live deletion)
+      val (weights, priors) = graft.operators.TextOps
+        .nbModelFrom(exceptTombstoned(Tables.documents(spark, dir),
+                                      dir, "doc_id"), refSource)
+      weights.write.mode(SaveMode.Overwrite)
+        .bucketBy(Buckets, "term").sortBy("term")
+        .format("parquet")
+        .saveAsTable(tbl(dir, "graft_nb_weights"))
+      saveTable(priors, dir, "graft_nb_priors")
+    }
 
-  /** Build the NB model only if the landed one doesn't match these
-    * parameters (the ensureIvf gate): first scoring run in a JVM pays
-    * the training shuffle, every subsequent run is join-only.
-    */
   private def nbBuildKey(spark: SparkSession, dir: String,
                          refSource: String): String =
     s"$dir|ref=$refSource|fp=${corpusFingerprint(dir, "documents")}|" +
       s"tfp=${tombstoneFingerprint(spark, dir)}"
 
+  /** Build the NB model only if the landed one doesn't match these
+    * parameters (the ensureIvf gate): first scoring run in a JVM pays
+    * the training shuffle, every subsequent run is join-only.
+    */
   def ensureNbModel(spark: SparkSession, dir: String,
-                    refSource: String = "src0"): Unit = {
-    val key = nbBuildKey(spark, dir, refSource)
-    val fresh = adoptLanded(spark, dir, "graft_nb_meta") &&
-      adoptLanded(spark, dir, "graft_nb_weights") &&
-      adoptLanded(spark, dir, "graft_nb_priors") && {
-        val r = spark.table(tbl(dir, "graft_nb_meta")).collect()
-        r.length == 1 && r(0).getString(0) == key
-      }
-    if (!fresh) buildNbModel(spark, dir, refSource)
-  }
+                    refSource: String = "src0"): Unit =
+    if (!landedFresh(spark, dir, readManifest(spark, dir), "nb",
+                     nbBuildKey(spark, dir, refSource),
+                     "graft_nb_weights", "graft_nb_priors"))
+      buildNbModel(spark, dir, refSource)
 
   // ---------- deletion / retraction (round 14) -----------------------------
 
@@ -1629,7 +1578,7 @@ object Warehouse {
     * landed posting rows themselves (one columnar postings scan per
     * delete batch — curation-cadence cost, never probe cost) and lands
     * it as a delta row tagged with the posting index's current
-    * (build_key, gen) identity; landedStats subtracts only deltas
+    * (build key, gen) identity; landedStats subtracts only deltas
     * matching the CURRENT identity, so a rebuild or compaction (which
     * both exclude/purge live tombstones physically) can never
     * double-subtract.
@@ -1687,10 +1636,8 @@ object Warehouse {
     // because the catalog forgot the table would bake an over-count
     // into the next compaction's folded stats (pre-adoption this
     // self-healed because a restart forced a born-clean rebuild)
-    if (adoptLanded(spark, dir, "graft_post_meta") &&
-        adoptLanded(spark, dir, physBase(mf, "graft_post_lists"),
-                    Seq("batch_id", "tb"))) {
-      val (bkey, gen) = postingsIdentity(spark, dir)
+    for ((bkey, gen) <- postingsIdentity(mf)
+         if adoptCurrent(spark, dir, mf, "graft_post_lists")) {
       val d = spark.table(tbl(dir, physBase(mf, "graft_post_lists")))
         .join(broadcast(newIds), "doc_id")
         .select(col("doc_id"), col("dl")).distinct()
@@ -1776,19 +1723,17 @@ object Warehouse {
     finally spark.conf.set(owKey, prior)
   }
 
-  /** The landed posting index's identity: (build_key, gen). gen counts
+  /** The landed posting index's identity in manifest `m`: (build key,
+    * gen), None while no posting build has finished. gen counts
     * physical generations — monotone across builds, +1 per compaction —
     * so stats deltas tagged with a superseded generation are inert (the
     * generation that replaced them already folded or purged what they
-    * corrected). gen lives only in the manifest: a compaction bumps it
-    * IN THE SAME atomic commit that swaps the folded stats, so readers
-    * can never pair new stats with an old gen.
+    * corrected). Both halves live in the manifest: a compaction bumps
+    * gen IN THE SAME atomic commit that swaps the folded stats, so
+    * readers can never pair new stats with an old gen.
     */
-  private[graft] def postingsIdentity(spark: SparkSession,
-                                      dir: String): (String, Long) =
-    (spark.table(tbl(dir, "graft_post_meta")).select(col("build_key"))
-       .collect()(0).getString(0),
-     readManifest(spark, dir).postGen.getOrElse(0L))
+  private[graft] def postingsIdentity(m: Manifest): Option[(String, Long)] =
+    m.keys.get("post").map((_, m.postGen.getOrElse(0L)))
 
   /** The scope-filtered deletion stats deltas, recovered across JVMs
     * like the tombstones themselves — None when nothing was ever
@@ -1964,12 +1909,10 @@ object Warehouse {
     // because the catalog forgot the table would bake an over-count
     // into the next compaction's folded stats (pre-adoption this
     // self-healed because a restart forced a born-clean rebuild)
-    val postPhys = physBase(m0, "graft_post_lists")
     val delta: Option[DataFrame] =
-      if (adoptLanded(spark, dir, "graft_post_meta") &&
-          adoptLanded(spark, dir, postPhys, Seq("batch_id", "tb"))) {
-        val (bkey, gen) = postingsIdentity(spark, dir)
-        val phys = spark.table(tbl(dir, postPhys))
+      for ((bkey, gen) <- postingsIdentity(m0)
+           if adoptCurrent(spark, dir, m0, "graft_post_lists")) yield {
+        val phys = spark.table(tbl(dir, physBase(m0, "graft_post_lists")))
           .join(broadcast(hit), "doc_id")
           .select(col("doc_id"), col("dl")).distinct()
           .localCheckpoint(false)
@@ -1977,15 +1920,15 @@ object Warehouse {
         // deltas are stored as amounts-to-SUBTRACT (landedStats negates
         // every row at read) — so the compensation lands NEGATED, and
         // compaction's fold likewise nets it against the delete's row
-        Some(phys
+        phys
           .agg(coalesce(count(lit(1)), lit(0L)).as("n"),
                coalesce(sum(col("dl").cast("long")), lit(0L)).as("s"))
           .filter(col("n") > 0)
           .select((-col("n")).as("n_docs"), (-col("s")).as("sum_dl"),
                   lit(bkey).as("bkey"), lit(gen).as("gen"),
                   lit(scope).as("scope"),
-                  lit(1000000L + batchKey).as("batch_id")))
-      } else None
+                  lit(1000000L + batchKey).as("batch_id"))
+      }
     val kept = tomb.join(
       broadcast(hit.select(col("doc_id").as("p_id"))),
       col("scope") === scope && col("doc_id") === col("p_id"),
@@ -2068,12 +2011,10 @@ object Warehouse {
     // still PHYSICALLY indexed, which the next adoption would then
     // serve back into service (a silent un-delete). Adoption makes
     // the surviving files count exactly like registered tables.
-    def idsOf(base: String, c: String): Option[DataFrame] = {
-      val phys = physBase(m0, base)
-      if (adoptLanded(spark, dir, phys, swapParts(base)))
-        Some(spark.table(tbl(dir, phys)).select(col(c).as("doc_id")))
+    def idsOf(base: String, c: String): Option[DataFrame] =
+      if (adoptCurrent(spark, dir, m0, base))
+        Some(spark.table(tbl(dir, physBase(m0, base))).select(col(c).as("doc_id")))
       else None
-    }
     def corpusOf(table: String, c: String): Option[DataFrame] = {
       val p = new Path(dir, s"$table.parquet")
       if (fsOf(spark, p).exists(p))
@@ -2124,7 +2065,7 @@ object Warehouse {
     * count, not data size; and purge is the physical
     * right-to-be-forgotten step the tombstone layer defers). Stats
     * re-sum exactly: one surviving row = Σ landed stats − Σ live
-    * deltas at the current identity. The metadata generation
+    * deltas at the current identity. The posting generation
     * increments, so superseded deltas go inert; live tombstone ROWS
     * stay (their future replays and probe anti-joins are no-ops over
     * purged ids — self-healing), and non-live what-if scopes keep
@@ -2166,9 +2107,10 @@ object Warehouse {
     // adopt the FULL store family (round-15 advice fix): a scheduled
     // maintenance run in a fresh JVM must compact the surviving files,
     // not crash on the catalog's amnesia
-    require(adoptLanded(spark, dir, "graft_post_meta") &&
-            adoptLanded(spark, dir, listsPhys, Seq("batch_id", "tb")) &&
-            adoptLanded(spark, dir, statsPhys, Seq("batch_id")),
+    val ident = postingsIdentity(m0)
+    require(ident.isDefined &&
+            adoptCurrent(spark, dir, m0, "graft_post_lists") &&
+            adoptCurrent(spark, dir, m0, "graft_post_stats"),
       "no landed posting index to compact")
     val listsSnap = partitionSet(spark, tbl(dir, listsPhys))
     val statsSnap = partitionSet(spark, tbl(dir, statsPhys))
@@ -2180,7 +2122,7 @@ object Warehouse {
     // the link
     val tombSnap = tombState(spark, dir)
     afterSnapshot()
-    val (bkey, gen) = postingsIdentity(spark, dir)
+    val (bkey, gen) = ident.get
     val folded = exceptTombstoned(
         spark.table(tbl(dir, listsPhys)), dir, "doc_id")
       .select(col("term"), col("doc_id"), col("dl"), col("tf"),
@@ -2252,8 +2194,8 @@ object Warehouse {
     val listsPhys = physBase(m0, "graft_ivf_lists")
     // full-family adoption (round-15 advice fix): fresh-JVM scheduled
     // maintenance must see the surviving store, not crash
-    require(adoptLanded(spark, dir, "graft_ivf_meta") &&
-            adoptLanded(spark, dir, listsPhys, Seq("batch_id", "cent_id")),
+    require(m0.keys.contains("ivf") &&
+            adoptCurrent(spark, dir, m0, "graft_ivf_lists"),
       "no landed IVF index to compact")
     val listsSnap = partitionSet(spark, tbl(dir, listsPhys))
     val tombSnap = tombState(spark, dir)
@@ -2391,11 +2333,11 @@ object Warehouse {
     * because directory-name inference would narrow `batch_id=-1` to
     * int and break upsert insertInto positionality; bucket specs
     * re-declared per [[BucketedLanded]]) and its partitions recovered.
-    * SAFE because every ensure* gate then validates the adopted meta
-    * build key — which folds in the corpus fingerprint and (NB/bloom)
-    * the tombstone-state fingerprint — so a stale adopted index
-    * rebuilds exactly as a stale registered one does. Returns true iff
-    * the table is catalog-visible afterwards.
+    * SAFE because every ensure* gate also validates the index's
+    * manifest build key — which folds in the corpus fingerprint and
+    * (NB/bloom) the tombstone-state fingerprint — so a stale adopted
+    * index rebuilds exactly as a stale registered one does. Returns
+    * true iff the table is catalog-visible afterwards.
     */
   private def adoptLanded(spark: SparkSession, dir: String, base: String,
                           parts: Seq[String] = Nil): Boolean = {
@@ -2429,6 +2371,11 @@ object Warehouse {
       }
     }
   }
+
+  /** [[adoptLanded]] for the table currently serving `logical` in `m`. */
+  private def adoptCurrent(spark: SparkSession, dir: String, m: Manifest,
+                           logical: String): Boolean =
+    adoptLanded(spark, dir, physBase(m, logical), swapParts(logical))
 
   /** A table location holds a COMMITTED write iff the job-commit
     * marker survived and no in-flight staging dir did: `_SUCCESS` is
@@ -2589,16 +2536,18 @@ object Warehouse {
       case None => 0L
     }
     val stores = Seq(
-      ("postings", "graft_post_lists", "doc_id"),
-      ("ivf", "graft_ivf_lists", "vec_id"))
+      ("postings", "post", "graft_post_lists", "doc_id"),
+      ("ivf", "ivf", "graft_ivf_lists", "vec_id"))
     import spark.implicits._
     val m = readManifest(spark, dir)
-    stores.flatMap { case (store, base, idCol) =>
+    stores.flatMap { case (store, index, base, idCol) =>
       val t = tbl(dir, physBase(m, base))
       // adoption, not tableExists: a scheduled autoMaintain in a fresh
       // JVM must see the surviving stores, or the spiral/purge backlog
-      // it exists to bound grows invisibly until some probe runs first
-      if (!adoptLanded(spark, dir, physBase(m, base), swapParts(base))) None
+      // it exists to bound grows invisibly until some probe runs first;
+      // a store whose build never finished (no key) is its gate's to
+      // rebuild, not maintenance's to compact
+      if (!m.keys.contains(index) || !adoptCurrent(spark, dir, m, base)) None
       else {
         val batches = landedBatchIds(spark, t)
         Some((store, (batches - (-1L)).size.toLong, files(t),

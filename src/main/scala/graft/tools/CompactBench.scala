@@ -80,7 +80,7 @@ object CompactBench {
     val rowsDel = probeRows()
     points += (("after_delete_1pct", listFiles(), probeSec()))
     Warehouse.compactPostings(spark, dir)
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta").foreach(
+    Seq("graft_post_lists", "graft_post_stats").foreach(
       t => spark.catalog.refreshTable(Warehouse.currentTable(spark, dir, t)))
     require(probeRows() == rowsDel,
       "compaction changed probe results — abort, numbers meaningless")

@@ -8,8 +8,9 @@ import graft.GraftSession
 import graft.sources.Warehouse
 
 /** Dev probe: Spark-job count + wall time of the WARM ensure* freshness
-  * gates (index already landed and fresh) — the fixed per-invocation
-  * cost every landed-index query pays before its probe runs.
+  * gates of all seven landed indexes (index already landed and fresh) —
+  * the fixed per-invocation cost every landed-index query pays before
+  * its probe runs.
   * Usage: runMain graft.tools.GateCost <sfDir>
   */
 object GateCost {
@@ -35,6 +36,9 @@ object GateCost {
     timed("ensureIvf(km=4)")(Warehouse.ensureIvf(spark, dir, kmeansIters = 4))
     timed("ensureMinhash")(Warehouse.ensureMinhash(spark, dir))
     timed("ensureAudio")(Warehouse.ensureAudio(spark, dir))
+    timed("ensureBloom")(Warehouse.ensureBloom(spark, dir))
+    timed("ensurePhash")(Warehouse.ensurePhash(spark, dir))
+    timed("ensureNbModel")(Warehouse.ensureNbModel(spark, dir))
     spark.stop()
   }
 }

@@ -298,7 +298,7 @@ class DeletionSpec extends SparkSpec {
     // needs-reingest, and an explicit re-ingest completes the restore
     Warehouse.deleteDocIds(spark, dir, victims, batchKey = 2L)
     Warehouse.compactPostings(spark, dir)
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta").foreach(
+    Seq("graft_post_lists", "graft_post_stats").foreach(
       t => spark.catalog.refreshTable(Warehouse.currentTable(spark, dir, t)))
     assert(Warehouse.undeleteDocs(spark, dir, victims.toDF("doc_id"), batchKey = 1L) ==
            ((0L, victims.size.toLong)))
@@ -339,8 +339,7 @@ class DeletionSpec extends SparkSpec {
     // must NOT prune
     Warehouse.compactPostings(spark, dir)
     Warehouse.compactIvf(spark, dir)
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta",
-        "graft_ivf_lists").foreach(
+    Seq("graft_post_lists", "graft_post_stats", "graft_ivf_lists").foreach(
       t => spark.catalog.refreshTable(Warehouse.currentTable(spark, dir, t)))
     assert(Warehouse.vacuumTombstones(spark, dir) == 0L)
     val probeBefore = strs(RetrievalOps.bm25SearchIndexedUnchecked(spark, dir))
@@ -423,7 +422,7 @@ class DeletionSpec extends SparkSpec {
     val pre = strs(RetrievalOps.bm25SearchIndexedUnchecked(spark, tmpDir))
     val filesBefore = tableFiles("graft_post_lists").size
     Warehouse.compactPostings(spark, tmpDir)
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta").foreach(
+    Seq("graft_post_lists", "graft_post_stats").foreach(
       t => spark.catalog.refreshTable(Warehouse.currentTable(spark, tmpDir, t)))
     // one base generation survives
     val parts = spark.sql(

@@ -61,6 +61,21 @@ class MaintenanceSpec extends SparkSpec {
     spark.sql(s"SHOW PARTITIONS ${Warehouse.currentTable(spark, dir, base)}")
       .collect().map(_.getString(0)).toSet
 
+  /** Posting/IVF generation tables of this corpus namespace that the
+    * current manifest does not name, in the catalog or as warehouse
+    * directories: what an aborted compaction must never leave behind.
+    */
+  private def strayGenerations(dir: String): Set[String] = {
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val named = Warehouse.readManifest(spark, dir).tabs.values
+      .map(Warehouse.tbl(dir, _)).toSet
+    val generation =
+      s"graft_(post_lists|post_stats|ivf_lists)__v\\d+_${Warehouse.ns(dir)}"
+    (spark.catalog.listTables().collect().map(_.name).toSet ++
+      Option(new java.io.File(wh).list()).toSeq.flatten)
+      .filter(_.matches(generation)) -- named
+  }
+
   test("recovery GC: stale commit temps and uncommitted generations go, fresh temps stay") {
     val dir = corpusCopy(withEmb = false)
     Warehouse.ensurePostings(spark, dir)
@@ -103,6 +118,8 @@ class MaintenanceSpec extends SparkSpec {
           syntheticDocs(Seq(999999102L), "zzguardr"), dir, batchKey = 2L))
     }
     assert(ex.getMessage.contains("concurrent upsert"))
+    assert(strayGenerations(dir).isEmpty,
+      s"aborted fold left its staged generation: ${strayGenerations(dir)}")
     // nothing lost: both batches still landed, both docs probe-visible
     val parts = partitions(dir, "graft_post_lists")
     assert(parts.exists(_.startsWith("batch_id=1/")) &&
@@ -112,8 +129,6 @@ class MaintenanceSpec extends SparkSpec {
       spark, dir, qterm("zzguardr"), k = 5, exclSelf = false))
       .exists(_.contains("999999102")),
       "the racing batch must stay probe-visible after the abort")
-    assert(!spark.catalog.tableExists(
-      Warehouse.tbl(dir, "graft_post_lists_stage")), "stage must be dropped")
     // at the quiet point the same compaction succeeds, probe-identically
     val probe0 = strs(RetrievalOps.bm25RankIndexed(
       spark, dir, qterm("zzguardq"), k = 5, exclSelf = false))
@@ -134,6 +149,8 @@ class MaintenanceSpec extends SparkSpec {
         Warehouse.upsertIvfFrom(batch, dir, batchKey = 9L))
     }
     assert(ex2.getMessage.contains("concurrent upsert"))
+    assert(strayGenerations(dir).isEmpty,
+      s"aborted IVF fold left its staged generation: ${strayGenerations(dir)}")
     assert(partitions(dir, "graft_ivf_lists").exists(_.startsWith("batch_id=9/")),
       "guard abort lost the racing IVF batch")
   }
@@ -177,7 +194,7 @@ class MaintenanceSpec extends SparkSpec {
       spark, dir, qterm("zzadoptq"), k = 5, exclSelf = false))
     assert(probe0.exists(_.contains("999999301")))
 
-    amnesia(dir, Seq("graft_post_meta", "graft_post_lists", "graft_post_stats"))
+    amnesia(dir, Seq("graft_post_lists", "graft_post_stats"))
     Warehouse.ensurePostings(spark, dir, excludeMod = 2)
     assert(tableFiles(dir, "graft_post_lists") == files0,
       "adoption must register the surviving files, not rebuild " +
@@ -192,8 +209,7 @@ class MaintenanceSpec extends SparkSpec {
     Warehouse.ensureIvf(spark, dir, kmeansIters = 0)
     val ann0 = strs(Warehouse.annIndexed(spark, dir))
     val ivfFiles0 = tableFiles(dir, "graft_ivf_lists")
-    amnesia(dir, Seq("graft_ivf_meta", "graft_ivf_cents", "graft_ivf_book",
-                     "graft_ivf_lists"))
+    amnesia(dir, Seq("graft_ivf_cents", "graft_ivf_book", "graft_ivf_lists"))
     Warehouse.ensureIvf(spark, dir, kmeansIters = 0)
     assert(tableFiles(dir, "graft_ivf_lists") == ivfFiles0,
       "IVF adoption must not rebuild")
@@ -226,10 +242,39 @@ class MaintenanceSpec extends SparkSpec {
     }
     rmTree(docPath)
     assert(new java.io.File(newDocs).renameTo(docPath))
-    amnesia(dir, Seq("graft_post_meta", "graft_post_lists", "graft_post_stats"))
+    amnesia(dir, Seq("graft_post_lists", "graft_post_stats"))
     Warehouse.ensurePostings(spark, dir, excludeMod = 2)
     assert(tableFiles(dir, "graft_post_lists") != files0,
       "a stale adopted index must rebuild (corpus fingerprint mismatch)")
+  }
+
+  test("a store with data but no build key rebuilds once, never reading an old meta table") {
+    val dir = corpusCopy(withEmb = false)
+    Warehouse.ensurePostings(spark, dir)
+    val key = Warehouse.readManifest(spark, dir).keys("post")
+    val files0 = tableFiles(dir, "graft_post_lists")
+    // a build killed between its data writes and its key commit leaves
+    // data without a key; so does a store landed while build keys lived
+    // in per-index graft_*_meta tables — planted here with the MATCHING
+    // key, which a gate trusting it would serve as fresh
+    Warehouse.bumpManifest(spark, dir, m => m.copy(keys = m.keys - "post"))
+    val planted = Warehouse.tbl(dir, "graft_post_meta")
+    import spark.implicits._
+    Seq(key).toDF("build_key").write.format("parquet").saveAsTable(planted)
+    val (_, readsPlanted) = sparkActivity(spark.table(planted).collect())
+    assert(readsPlanted.exists(_.contains(planted)),
+      "fixture: a read of the planted table must show in the plans")
+
+    val (_, plans) = sparkActivity(Warehouse.ensurePostings(spark, dir))
+    assert(tableFiles(dir, "graft_post_lists") != files0,
+      "a store without its build key must rebuild")
+    assert(Warehouse.readManifest(spark, dir).keys.get("post").contains(key))
+    assert(!plans.exists(_.contains(planted)), "the gate read the meta table")
+    val files1 = tableFiles(dir, "graft_post_lists")
+    val (jobs, _) = sparkActivity(Warehouse.ensurePostings(spark, dir))
+    assert(jobs == 0 && tableFiles(dir, "graft_post_lists") == files1,
+      s"the rebuilt store must be warm (jobs=$jobs)")
+    spark.sql(s"DROP TABLE $planted")
   }
 
   test("vacuum after catalog amnesia adopts the landed surfaces: no silent un-delete") {
@@ -243,7 +288,7 @@ class MaintenanceSpec extends SparkSpec {
     Warehouse.deleteDocIds(spark, dir, Seq(999999401L))
     assert(strs(RetrievalOps.bm25RankIndexed(
       spark, dir, qterm("zzvacq"), k = 5, exclSelf = false)).isEmpty)
-    amnesia(dir, Seq("graft_post_meta", "graft_post_lists", "graft_post_stats"))
+    amnesia(dir, Seq("graft_post_lists", "graft_post_stats"))
     // pre-fix, the forgotten postings dropped out of the re-entry
     // surfaces, the tombstone was pruned as unreferenced, and the
     // next adoption served the deleted doc again

@@ -387,7 +387,7 @@ class WarehouseSpec extends SparkSpec {
     // the rebuilt index answers over the mutated corpus: stats (N)
     // changed, so scores differ even if the top lists coincide
     assert(probeAfter.nonEmpty && probeAfter != probeBefore)
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta").foreach(
+    Seq("graft_post_lists", "graft_post_stats").foreach(
       t => spark.sql(s"DROP TABLE IF EXISTS ${Warehouse.tbl(tmp, t)}"))
   }
 
@@ -460,7 +460,7 @@ class WarehouseSpec extends SparkSpec {
     val b = Warehouse.bm25Indexed(spark, other).collect().toSeq.map(_.toString)
     assert(a.nonEmpty && b.nonEmpty && a != b)
     // cleanup: drop the other dir's tables so later suites see only sf's
-    Seq("graft_post_lists", "graft_post_stats", "graft_post_meta").foreach(
+    Seq("graft_post_lists", "graft_post_stats").foreach(
       t => spark.sql(s"DROP TABLE IF EXISTS ${Warehouse.tbl(other, t)}"))
   }
 
